@@ -125,6 +125,7 @@ _B = 0.75
 # existing tests stable.
 from redis_streams_spark.operators.segstore import (  # noqa: E402
     MANIFEST as _MANIFEST,
+    _local_path,
     drop_dead as _drop_dead,
     next_generation as _next_generation,
     open_index as _open_index,
@@ -154,11 +155,22 @@ _MAX_BUCKETS = 4096
 
 
 def _derive_n_buckets(docs: DataFrame) -> int:
+    """Bucket count for ``docs`` from its plan's size estimate.  Inputs
+    Spark cannot size (RDD-backed frames, streaming micro-batches)
+    report ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default);
+    such an estimate is unknown, not huge, so they get N_TERM_BUCKETS."""
     try:
         size = int(
             docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
+        unknown = int(
+            docs.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .defaultSizeInBytes()
+        )
     except Exception:
+        return N_TERM_BUCKETS
+    if size >= unknown:
         return N_TERM_BUCKETS
     n = _MIN_BUCKETS
     while n < _MAX_BUCKETS and n * _TARGET_BUCKET_INPUT_BYTES < size:
@@ -175,17 +187,24 @@ def _layout_buckets(gpath: str) -> int:
 
 def _segment_buckets(
     gpath: str, docs: DataFrame, n_buckets: int | None = None
-) -> int:
-    """Bucket count for a segment write: the generation's pinned layout
-    if one exists (appends MUST match the live partitioning), else the
-    explicit override or the size-derived count, pinned for the
-    generation."""
+) -> tuple[int, bool]:
+    """Bucket count for a segment write and whether the write must pin
+    it in LAYOUT: the generation's pinned layout if one exists (appends
+    MUST match the live partitioning); N_TERM_BUCKETS for a pre-layout
+    generation that already holds postings (its segments were written
+    at that count); else the explicit override or the size-derived
+    count.  The caller pins after its postings write succeeds, so a
+    failed first write leaves no layout behind."""
     layout = _read_layout(gpath)
     if layout is not None and "n_term_buckets" in layout:
-        return int(layout["n_term_buckets"])
+        return int(layout["n_term_buckets"]), False
+    postings = os.path.join(_local_path(gpath), "postings")
+    if os.path.isdir(postings) and any(
+        d.startswith("segment=") for d in os.listdir(postings)
+    ):
+        return N_TERM_BUCKETS, True
     n = n_buckets if n_buckets is not None else _derive_n_buckets(docs)
-    _write_layout(gpath, {"n_term_buckets": n})
-    return n
+    return n, True
 
 
 def _write_segment(
@@ -199,7 +218,7 @@ def _write_segment(
     from redis_streams_spark.functions.textfns import words
 
     spark = docs.sparkSession
-    n_buckets = _segment_buckets(path, docs, n_buckets)
+    n_buckets, pin = _segment_buckets(path, docs, n_buckets)
     base = docs.select("doc_id", words("text").alias("w"))
     dl = base.where(F.size("w") > 0).select(
         "doc_id", F.size("w").cast("long").alias("dl")
@@ -228,6 +247,8 @@ def _write_segment(
     postings.repartition("bucket").write.mode(mode).option(*owm).partitionBy(
         "segment", "bucket"
     ).parquet(f"{path}/postings")
+    if pin:
+        _write_layout(path, {"n_term_buckets": n_buckets})
     # The terms and stats passes derive from the postings JUST WRITTEN
     # instead of a persist of the postings lineage (r14, guide §5/§8:
     # the written output doubles as the materialized intermediate).
@@ -949,9 +970,12 @@ def _meta_frames(
         [(t, int(d)) for t, (d, _m) in sorted(meta.items())],
         "df_tok STRING, df BIGINT",
     )
+    # n_docs == 0 (no query term in the index): avgdl is the same 1.0
+    # placeholder _term_meta returns — sdl/0 raises under ANSI mode
+    avgdl = F.col("sdl") * 1.0 / F.col("n") if n_docs else F.lit(1.0)
     stats = spark.createDataFrame(
         [(int(n_docs), int(sdl))], "n BIGINT, sdl BIGINT"
-    ).select("n", (F.col("sdl") * 1.0 / F.col("n")).alias("avgdl"))
+    ).select("n", avgdl.alias("avgdl"))
     return dfreq, stats
 
 

@@ -4,12 +4,18 @@ Re-implements the reference's core dataflow (SURVEY §3.1 trace of
 consumer.py:92-103) over StreamLog group state:
 
 1. arm a hard deadline (now + max_wait_time_ms);
-2. count already-assigned (PEL) messages first — crash recovery;
-3. fill loop: while now ≤ deadline and assigned < batch_size, claim up to
-   the deficit of never-delivered messages ('>' read), sleeping
-   poll_time_ms when the stream is dry (the BLOCK emulation);
-4. materialize the batch by re-reading this consumer's own PEL ('0' read)
-   capped at batch_size — idempotent across crashes;
+2. claim loop, ONE locked group-state update per iteration: touch the
+   consumer, claim up to the deficit of never-delivered messages ('>'
+   read, one read_slice) and return this consumer's own PEL sorted by
+   position and capped at batch_size (the '0' re-read) — so already
+   assigned (PEL) messages count first, which is crash recovery; the
+   first iteration bumps times_delivered on those redelivered entries;
+3. while now ≤ deadline and the PEL holds fewer than batch_size, sleep
+   poll_time_ms after a claim that came back short (the BLOCK
+   emulation) and claim again;
+4. build the batch from the rows the claims already parsed; only
+   recovered or XCLAIMed entries are read again, in one read_slice
+   outside the lock — idempotent across crashes;
 5. caller processes items and acks each via
    remove_item_from_consumer_group (XACK: removes from PEL, does NOT
    delete from the stream — consumer.py:180-191).
@@ -66,76 +72,74 @@ class Consumer(BaseStreamClass):
     def _touch(self, state: dict) -> None:
         state["consumers"].setdefault(self.consumer_id, {})["last_seen_ms"] = now_ms()
 
-    def _claim_new(self, deficit: int) -> int:
-        """'>' read: move up to ``deficit`` never-delivered messages into
-        this consumer's PEL, advancing the group cursor.  Runs under the
-        group lock so concurrent consumers claim disjoint messages (the
-        Redis-server serialization of XREADGROUP)."""
-
-        def claim(state: dict) -> int:
-            self._touch(state)
+    def _claim(self, state: dict, first: bool):
+        """One locked step of the fill loop: touch the consumer, claim up
+        to the deficit of never-delivered messages ('>' read) with a
+        single ``read_slice`` advancing the group cursor, then return
+        this consumer's own PEL sorted by position and capped at
+        batch_size (the '0' re-read) with the claimed rows.  On the
+        first step of a ``get_items`` the entries this consumer already
+        had pending are a redelivery, so the counter of those the batch
+        hands out again is bumped.  Runs under the group lock so
+        concurrent consumers claim disjoint messages (the Redis-server
+        serialization of XREADGROUP); it only mutates ``state``, so it
+        is safe to re-run."""
+        self._touch(state)
+        pel = state["pel"]
+        own = sorted(
+            (e["pos"], msgid)
+            for msgid, e in pel.items()
+            if e["consumer"] == self.consumer_id
+        )
+        if first:
+            for _, msgid in own[: self.batch_size]:
+                pel[msgid]["times_delivered"] += 1
+        want = max(0, self.batch_size - len(own))
+        rows = []
+        if want:
             start = state["last_delivered_pos"]
-            batch = self.log.read_slice(start, min(start + deficit, self.log.count()))
-            t = now_ms()
-            for pos, msgid, _ in batch:
-                state["pel"][msgid] = {
-                    "pos": pos,
-                    "consumer": self.consumer_id,
-                    "delivered_ms": t,
-                    "times_delivered": 1,
-                }
-                state["last_delivered_pos"] = pos + 1
-            return len(batch)
-
-        return self.log.update_group(self.consumer_group, claim)
+            rows = self.log.read_slice(start, min(start + want, self.log.count()))
+        t = now_ms()
+        for pos, msgid, _ in rows:
+            pel[msgid] = {
+                "pos": pos,
+                "consumer": self.consumer_id,
+                "delivered_ms": t,
+                "times_delivered": 1,
+            }
+            state["last_delivered_pos"] = pos + 1
+        # the cursor only advances, so every claimed row sorts after
+        # every entry already in the PEL
+        mine = (own + [(pos, msgid) for pos, msgid, _ in rows])[: self.batch_size]
+        return mine, rows
 
     # -- public API ------------------------------------------------------
     def get_items(self) -> list[RedisMsg]:
         """Collect up to batch_size messages, returning after at most
         ~max_wait_time_ms even when the batch is incomplete."""
         self._set_hard_stop_time()
-
-        def register(state: dict) -> set[str]:
-            self._touch(state)
-            return {
-                m for m, e in state["pel"].items() if e["consumer"] == self.consumer_id
-            }
-
-        recovered = self.log.update_group(self.consumer_group, register)
-        assigned = len(recovered)
-        while self._keep_fetching(assigned):
-            got = self._claim_new(max(1, self.batch_size - assigned))
-            assigned += got
-            if got == 0 and self._keep_fetching(assigned):
-                remaining = self._hard_stop_ms - now_ms()
-                time.sleep(max(0.0, min(self.poll_time_ms, remaining) / 1000.0))
-        # final '0' re-read of own PEL, capped at batch_size
-        def reread(state: dict) -> list[tuple[int, str]]:
-            mine = sorted(
-                (e["pos"], msgid)
-                for msgid, e in state["pel"].items()
-                if e["consumer"] == self.consumer_id
-            )[: self.batch_size]
-            for _, msgid in mine:
-                if msgid in recovered:  # redelivery bumps the counter
-                    state["pel"][msgid]["times_delivered"] += 1
-            return mine
-
-        mine = self.log.update_group(self.consumer_group, reread)
-        by_pos = {
-            pos: msgid for pos, msgid in mine
-        }
-        id_to_content = {
-            msgid: content
-            for _, msgid, content in self.log.read_slice(
-                min(by_pos, default=0), max(by_pos, default=0) + 1
+        content: dict[str, dict] = {}
+        first = True
+        while True:
+            mine, rows = self.log.update_group(
+                self.consumer_group, lambda state: self._claim(state, first)
             )
-            if msgid in set(by_pos.values())
-        }
-        return [
-            RedisMsg(msgid=msgid, content=id_to_content.get(msgid, {}))
-            for _, msgid in mine
-        ]
+            first = False
+            content.update((msgid, c) for _, msgid, c in rows)
+            if not self._keep_fetching(len(mine)):
+                break
+            # a claim that left the batch short found the stream dry:
+            # the BLOCK emulation
+            remaining = self._hard_stop_ms - now_ms()
+            time.sleep(max(0.0, min(self.poll_time_ms, remaining) / 1000.0))
+        # recovered and XCLAIMed entries were not parsed by a claim
+        missing = [pos for pos, msgid in mine if msgid not in content]
+        if missing:
+            content.update(
+                (msgid, c)
+                for _, msgid, c in self.log.read_slice(min(missing), max(missing) + 1)
+            )
+        return [RedisMsg(msgid=msgid, content=content.get(msgid, {})) for _, msgid in mine]
 
     def remove_item_from_consumer_group(self, item_id: str) -> int:
         """XACK: drop one message from the PEL; the message itself stays
