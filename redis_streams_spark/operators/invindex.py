@@ -186,23 +186,29 @@ def _layout_buckets(gpath: str) -> int:
 
 
 def _segment_buckets(
-    gpath: str, docs: DataFrame, n_buckets: int | None = None
+    gpath: str, docs: DataFrame, n_buckets: int | None, rebuild: bool
 ) -> tuple[int, bool]:
     """Bucket count for a segment write and whether the write must pin
-    it in LAYOUT: the generation's pinned layout if one exists (appends
-    MUST match the live partitioning); N_TERM_BUCKETS for a pre-layout
-    generation that already holds postings (its segments were written
-    at that count); else the explicit override or the size-derived
-    count.  The caller pins after its postings write succeeds, so a
-    failed first write leaves no layout behind."""
-    layout = _read_layout(gpath)
-    if layout is not None and "n_term_buckets" in layout:
-        return int(layout["n_term_buckets"]), False
-    postings = os.path.join(_local_path(gpath), "postings")
-    if os.path.isdir(postings) and any(
-        d.startswith("segment=") for d in os.listdir(postings)
-    ):
-        return N_TERM_BUCKETS, True
+    it in LAYOUT.  A ``rebuild`` (the static-overwrite build, which
+    clears the tree) takes the explicit override or the size-derived
+    count and re-pins it, whatever layout the tree had.  A write that
+    keeps existing segments uses the generation's pinned layout if one
+    exists (appends MUST match the live partitioning); N_TERM_BUCKETS
+    for a pre-layout generation that already holds postings (its
+    segments were written at that count); else the override or the
+    size-derived count.  The caller pins after its postings write
+    succeeds, so a failed first write leaves no layout behind; an
+    unmanaged build that dies between the two is as incomplete as one
+    that dies before its terms and stats, and must be re-run."""
+    if not rebuild:
+        layout = _read_layout(gpath)
+        if layout is not None and "n_term_buckets" in layout:
+            return int(layout["n_term_buckets"]), False
+        postings = os.path.join(_local_path(gpath), "postings")
+        if os.path.isdir(postings) and any(
+            d.startswith("segment=") for d in os.listdir(postings)
+        ):
+            return N_TERM_BUCKETS, True
     n = n_buckets if n_buckets is not None else _derive_n_buckets(docs)
     return n, True
 
@@ -218,7 +224,9 @@ def _write_segment(
     from redis_streams_spark.functions.textfns import words
 
     spark = docs.sparkSession
-    n_buckets, pin = _segment_buckets(path, docs, n_buckets)
+    n_buckets, pin = _segment_buckets(
+        path, docs, n_buckets, rebuild=mode == "overwrite" and not dynamic
+    )
     base = docs.select("doc_id", words("text").alias("w"))
     dl = base.where(F.size("w") > 0).select(
         "doc_id", F.size("w").cast("long").alias("dl")

@@ -79,23 +79,15 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(
-    app_name: str = "redis-streams-spark",
-    cpus: int | None = None,
-    conf: dict[str, str] | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "redis-streams-spark", cpus: int | None = None) -> SparkSession:
     """Build a local session sized for this host (tests / bench).
-
-    ``conf`` adds launch-time settings (class path, Hadoop file system
-    bindings) and overrides the defaults below; it only takes effect when
-    this call starts the JVM.
 
     On a real cluster users bring their own session; everything else in the
     package only assumes :func:`configure` was applied.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
@@ -113,10 +105,8 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
         )
+        .getOrCreate()
     )
-    for key, value in (conf or {}).items():
-        builder = builder.config(key, value)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return configure(spark)
 

@@ -1,12 +1,10 @@
 from __future__ import annotations
 
-import glob
-import hashlib
 import os
+import shlex
 import shutil
 import subprocess
 import sys
-import tempfile
 
 import duckdb
 import pytest
@@ -34,53 +32,46 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 FAST_FS_SRC = os.path.join(ROOT, "tests", "jvm", "FastLocalFileSystem.java")
 
 
-def _fast_local_fs_conf() -> dict[str, str]:
-    """Session confs that bind ``file:`` to tests/jvm/FastLocalFileSystem,
-    compiled once per source version into the temp dir.
+def _bind_fast_local_fs(out: str) -> None:
+    """Compile tests/jvm/FastLocalFileSystem into ``out`` and bind
+    ``file:`` to it through PYSPARK_SUBMIT_ARGS, which pyspark reads when
+    it launches the JVM.
 
     Without the native hadoop library every directory and output file
     Spark creates costs a forked ``chmod``; the tests create tens of
-    thousands.  Returns {} (the stock file system) when no JDK compiler
-    is available or the build fails."""
+    thousands.  Leaves the stock file system when no JDK compiler is
+    available or the build fails."""
     from pyspark.find_spark_home import _find_spark_home
 
     javac = shutil.which("javac")
     if javac is None:
-        return {}
-    with open(FAST_FS_SRC, "rb") as f:
-        tag = hashlib.sha256(f.read()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"rss-fast-local-fs-{tag}")
-    if not os.path.isdir(out):
-        jars = os.path.join(_find_spark_home(), "jars")
-        if not glob.glob(os.path.join(jars, "hadoop-client-api-*.jar")):
-            return {}
-        build = tempfile.mkdtemp(prefix="rss-fast-local-fs-build-")
-        try:
-            subprocess.run(
-                [javac, "-nowarn", "-d", build, "-cp",
-                 os.path.join(jars, "*"), FAST_FS_SRC],
-                check=True, capture_output=True, timeout=120,
-            )
-            os.replace(build, out)
-        except (OSError, subprocess.SubprocessError):
-            shutil.rmtree(build, ignore_errors=True)
-            if not os.path.isdir(out):  # a concurrent session may have won
-                return {}
-    return {
-        "spark.driver.extraClassPath": out,
-        "spark.hadoop.fs.file.impl": "rss.testfs.FastLocalFileSystem",
-        "spark.hadoop.fs.AbstractFileSystem.file.impl":
-            "rss.testfs.FastLocalFileSystem$Fs",
-    }
+        return
+    jars = os.path.join(_find_spark_home(), "jars", "*")
+    try:
+        subprocess.run(
+            [javac, "-nowarn", "-d", out, "-cp", jars, FAST_FS_SRC],
+            check=True, capture_output=True, timeout=120,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    args = args.strip().removesuffix("pyspark-shell").strip()
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        args,
+        "--driver-class-path", shlex.quote(out),
+        "--conf", "spark.hadoop.fs.file.impl=rss.testfs.FastLocalFileSystem",
+        "--conf", shlex.quote(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl="
+            "rss.testfs.FastLocalFileSystem$Fs"
+        ),
+        "pyspark-shell",
+    ]).strip()
 
 
 @pytest.fixture(scope="session")
-def spark():
-    spark = get_spark(
-        "pytest",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
-        conf=_fast_local_fs_conf(),
-    )
+def spark(tmp_path_factory):
+    _bind_fast_local_fs(str(tmp_path_factory.mktemp("fast-local-fs")))
+    spark = get_spark("pytest", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield spark
     spark.stop()
 

@@ -59,6 +59,18 @@ def test_pre_layout_generation_keeps_its_bucket_count(spark, tmp_path):
     assert read_layout(path) == {"n_term_buckets": N_TERM_BUCKETS}
 
 
+def test_rebuild_of_pre_layout_tree_honours_n_buckets(spark, tmp_path):
+    """The static-overwrite build clears the tree, so a pre-layout
+    tree's count does not bind it: the explicit override is pinned."""
+    path = str(tmp_path / "idx")
+    rows = [(i, f"{_TERM} filler{i}") for i in range(20)]
+    build_inverted_index(_docs(spark, rows), path, n_buckets=N_TERM_BUCKETS)
+    os.remove(os.path.join(path, "LAYOUT"))
+    build_inverted_index(_docs(spark, rows), path, n_buckets=8)
+    assert read_layout(path) == {"n_term_buckets": 8}
+    assert bm25_topk_indexed(spark, path, {0: (_TERM,)}, k=50).count() == 20
+
+
 def test_unsizeable_input_derives_default_bucket_count(spark):
     """An RDD-backed frame reports spark.sql.defaultSizeInBytes; that is
     an unknown size, not a huge one."""

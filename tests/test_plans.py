@@ -3,6 +3,8 @@ survive a 100× scale-up must hold structurally, not by luck."""
 
 from __future__ import annotations
 
+import pytest
+
 from redis_streams_spark.plans import (
     codegen_stage_count,
     has_broadcast_join,
@@ -15,6 +17,21 @@ from redis_streams_spark.queries import all_queries
 
 def _df(spark, sf_dir, name):
     return all_queries()[name].fn(spark, sf_dir)
+
+
+@pytest.fixture(scope="module")
+def query_df(spark, sf_dir):
+    """``name -> DataFrame``, built once per module: the fleet-wide gates
+    below inspect the same queries, and a frame's QueryExecution keeps
+    its analyzed, optimized and physical plans once computed."""
+    frames = {}
+
+    def get(name):
+        if name not in frames:
+            frames[name] = _df(spark, sf_dir, name)
+        return frames[name]
+
+    return get
 
 
 def test_q01_pushdown_and_pruning(spark, sf_dir):
@@ -293,7 +310,7 @@ _PYTHON_OK = {
 }
 
 
-def test_all_query_plans_clean(spark, sf_dir):
+def test_all_query_plans_clean(query_df):
     """Fleet-wide plan gate over every registered query: no cartesian
     products anywhere, nested-loop joins only where a scalar/tiny
     broadcast makes them the right plan, Python evaluation only in the
@@ -304,8 +321,8 @@ def test_all_query_plans_clean(spark, sf_dir):
     scan — their per-round join shapes are covered separately by
     tests/test_dedup_ops.py's union-find triangulation instead."""
     problems = []
-    for name, spec in all_queries().items():
-        plan = plan_str(spec.fn(spark, sf_dir))
+    for name in all_queries():
+        plan = plan_str(query_df(name))
         if "CartesianProduct" in plan:
             problems.append(f"{name}: CartesianProduct")
         if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_OK:
@@ -408,7 +425,7 @@ def test_every_registration_declares_a_shape():
     )
 
 
-def test_no_trailing_sort_on_per_row_outputs(spark, sf_dir):
+def test_no_trailing_sort_on_per_row_outputs(query_df):
     """Structural form of the round-8/9 presentation-sort sweep: a
     per-row-output query must contain no global Sort at all, so a
     regression (someone re-adds `.orderBy("doc_id")` for readability)
@@ -417,7 +434,7 @@ def test_no_trailing_sort_on_per_row_outputs(spark, sf_dir):
 
     problems = []
     for name in sorted(_shaped("per_row")):
-        hits = global_sorts(all_queries()[name].fn(spark, sf_dir))
+        hits = global_sorts(query_df(name))
         if hits:
             problems.append(f"{name}: {hits}")
     assert not problems, "\n".join(problems)
@@ -433,12 +450,12 @@ def test_no_trailing_sort_on_per_row_outputs(spark, sf_dir):
 # loophole the r09 verdict named.
 
 
-def test_prefix_sum_queries_no_global_window_at_all(spark, sf_dir):
+def test_prefix_sum_queries_no_global_window_at_all(query_df):
     from redis_streams_spark.plans import global_windows
 
     problems = []
     for name in sorted(_shaped("prefix_sum")):
-        hits = global_windows(all_queries()[name].fn(spark, sf_dir))
+        hits = global_windows(query_df(name))
         if hits:
             problems.append(f"{name}: {hits}")
     assert not problems, "\n".join(problems)
@@ -449,7 +466,7 @@ def test_prefix_sum_queries_no_global_window_at_all(spark, sf_dir):
 _GLOBAL_WINDOW_OK: set[str] = set()
 
 
-def test_no_unguarded_global_windows(spark, sf_dir):
+def test_no_unguarded_global_windows(query_df):
     """Fleet-wide: every Window with an empty partition spec must sit
     above an Aggregate (the two-phase prefix-sum pattern, where the
     window's input is already |groups|-bounded) — a global window over
@@ -457,10 +474,10 @@ def test_no_unguarded_global_windows(spark, sf_dir):
     from redis_streams_spark.plans import unguarded_global_windows
 
     problems = []
-    for name, spec in all_queries().items():
+    for name in all_queries():
         if name in _GLOBAL_WINDOW_OK:
             continue
-        hits = unguarded_global_windows(spec.fn(spark, sf_dir))
+        hits = unguarded_global_windows(query_df(name))
         if hits:
             problems.append(f"{name}: {hits}")
     assert not problems, "\n".join(problems)
