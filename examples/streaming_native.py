@@ -66,7 +66,7 @@ def main() -> None:
         "FROM native_out ORDER BY win_start, event_type"
     ).show(12, truncate=False)
 
-    print("monitor rows (one per micro-batch):")
+    print("monitor rows (latest per query):")
     for m in listener.metrics[:5]:
         print(" ", m)
     rate, suggestion = listener.scale_decision()

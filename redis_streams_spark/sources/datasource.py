@@ -38,7 +38,9 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import uuid
+import zipimport
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -56,6 +58,27 @@ from pyspark.sql.types import StructType
 from redis_streams_spark.sources.redis_log import connect_log
 
 SCHEMA = "msgid string, content map<string,string>"
+
+
+def _drop_zip_importers() -> None:
+    """Make the next Python-worker call into this process cheap.
+
+    Every pyspark worker call starts with ``importlib.invalidate_caches()``
+    (``worker_util.setup_spark_files``).  On CPython < 3.13 that makes each
+    cached ``zipimporter`` re-read its archive's central directory at once:
+    with ``pyspark.zip`` (one importer per imported sub-package), the py4j
+    zip and the spark-core jar on the worker's path, about 28k entries and
+    125-130 ms per call.  CPython 3.13 made ``zipimporter.invalidate_caches``
+    lazy: it only drops the archive's listing, which is re-read on the next
+    lookup.  Doing the same here (forget the importers and their listings,
+    so the next lookup rebuilds them from the archive as it is then) gives
+    that behaviour on older versions.  Delete once 3.13 is the minimum."""
+    if sys.version_info >= (3, 13):
+        return
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)
+            zipimport._zip_directory_cache.pop(finder.archive, None)
 
 
 def _arrow_batches(records: list[tuple[int, str, dict]], chunk: int = 4096):
@@ -156,6 +179,7 @@ def _content_jsons(batch) -> list[str]:
 def _stage_batches(root: str, stream: str, iterator) -> StagedCommit:
     """Task-side staging: serialize every RecordBatch to content-JSON
     lines in one staging file (buffered, one write per batch)."""
+    _drop_zip_importers()
     staging_dir = os.path.join(root, stream, "staging")
     os.makedirs(staging_dir, exist_ok=True)
     path = os.path.join(staging_dir, f"{uuid.uuid4().hex}.jsonl")
@@ -223,10 +247,14 @@ class RedisLogDataSource(DataSource):
     def streamReader(self, schema: StructType) -> "RedisLogStreamReader":
         return RedisLogStreamReader(self.options)
 
+    # both driver-side sink runners (writer set-up and epoch commit) create
+    # the writer through these
     def streamWriter(self, schema: StructType, overwrite: bool) -> "RedisLogStreamWriter":
+        _drop_zip_importers()
         return RedisLogStreamWriter(self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> "RedisLogBatchWriter":
+        _drop_zip_importers()
         return RedisLogBatchWriter(self.options, overwrite)
 
 
@@ -245,6 +273,7 @@ class RedisLogBatchReader(DataSourceReader):
         ]
 
     def read(self, partition: RangePartition):
+        _drop_zip_importers()
         log = connect_log(partition.root, partition.stream, url=partition.url)
         yield from _arrow_batches(log.read_slice(partition.start, partition.end))
 
@@ -287,6 +316,7 @@ class RedisLogStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: RangePartition):
+        _drop_zip_importers()
         log = connect_log(partition.root, partition.stream, url=partition.url)
         yield from _arrow_batches(log.read_slice(partition.start, partition.end))
 

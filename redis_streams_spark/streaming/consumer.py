@@ -98,7 +98,13 @@ class Consumer(BaseStreamClass):
         rows = []
         if want:
             start = state["last_delivered_pos"]
-            rows = self.log.read_slice(start, min(start + want, self.log.count()))
+            end = self.log.count()
+            rows = self.log.read_slice(start, min(start + want, end))
+            if not rows and start < end:
+                # the cursor fell behind the trim point: like Redis's '>'
+                # read, claim from the oldest surviving entry
+                start = max(start, self.log.first_pos())
+                rows = self.log.read_slice(start, min(start + want, end))
         t = now_ms()
         for pos, msgid, _ in rows:
             pel[msgid] = {

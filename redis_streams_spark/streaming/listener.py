@@ -47,7 +47,14 @@ class MonitorListener(StreamingQueryListener):
         self.last_progress_ms: dict[str, int] = {}
         self.backlog: dict[str, int] = {}
         self.inflight: dict[str, int] = {}
-        self.metrics: list[ConsumerMetrics] = []
+        self._latest: dict[str, ConsumerMetrics] = {}
+
+    @property
+    def metrics(self) -> list[ConsumerMetrics]:
+        """The latest health row of each query seen, in first-seen order
+        (one row per query, not per progress event, so a long-running
+        query holds constant memory)."""
+        return list(self._latest.values())
 
     # -- listener hooks --------------------------------------------------
     def onQueryStarted(self, event) -> None:
@@ -69,10 +76,8 @@ class MonitorListener(StreamingQueryListener):
         self.backlog[qid] = backlog
         self.inflight[qid] = pending
         status = self._status(pending=pending, idle=idle)
-        self.metrics.append(
-            ConsumerMetrics(
-                consumer_id=qid, pending_items=pending, idle_time=idle, status=status
-            )
+        self._latest[qid] = ConsumerMetrics(
+            consumer_id=qid, pending_items=pending, idle_time=idle, status=status
         )
 
     def onQueryTerminated(self, event) -> None:

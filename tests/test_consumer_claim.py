@@ -129,3 +129,20 @@ def test_many_consumers_claim_each_message_once(log):
     assert errors == []
     assert sorted(got) == sorted(ids)
     assert log.group_state("grp")["pel"] == {}
+
+
+def test_cursor_behind_trim_point_claims_oldest_survivor(log):
+    """A group cursor whose next positions were all trimmed claims from
+    the oldest retained message, as Redis's '>' read does, instead of
+    returning empty batches forever."""
+    con = _consumer(log, "c1", batch_size=2)
+    producer = Producer(log, "claims", maxlen=3)
+    ids = [producer.add({"i": i}) for i in range(10)]
+    assert log.first_pos() == 7
+    assert log.group_state("grp")["last_delivered_pos"] == 0
+    batch = con.get_items()
+    assert [m.msgid for m in batch] == ids[7:9]
+    assert [m.content for m in batch] == [{"i": "7"}, {"i": "8"}]
+    con.remove_items_from_consumer_group([m.msgid for m in batch])
+    assert [m.msgid for m in con.get_items()] == ids[9:]
+    assert log.group_state("grp")["last_delivered_pos"] == 10
