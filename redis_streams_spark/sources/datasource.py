@@ -129,6 +129,13 @@ class RangePartition(InputPartition):
     url: str | None = None
 
 
+def _read_partition(partition: RangePartition):
+    """Both readers' ``read``: the partition's range as Arrow batches."""
+    _drop_zip_importers()
+    log = connect_log(partition.root, partition.stream, url=partition.url)
+    yield from _arrow_batches(log.read_slice(partition.start, partition.end))
+
+
 @dataclass
 class StagedCommit(WriterCommitMessage):
     staging_path: str
@@ -195,31 +202,31 @@ def _stage_batches(root: str, stream: str, iterator) -> StagedCommit:
 
 def _append_staged(log, messages, maxlen: int | None) -> int:
     """Driver-side commit: concatenate staged content-JSON lines and
-    append them in ONE batch.  The file backend splices the lines
-    byte-for-byte (``append_many_serialized`` — zero per-message
-    parse/re-serialize); network backends fall back to parsed
-    ``append_many``.  Returns the number of rows appended.
+    append them in ONE batch through ``append_many_serialized`` (the
+    file backend splices the lines byte-for-byte, the Redis backend
+    parses them into fields).  Returns the number of rows appended.
 
     Staging files are removed only AFTER the append succeeds: if the
     backend raises (lock contention, disk full, Redis error), the
     epoch's staged rows stay on disk so a commit retry replays them and
     ``abort()`` has something to clean (r09 advice)."""
     lines: list[str] = []
-    staged_paths: list[str] = []
     for msg in messages:
         if msg is None:
             continue
         with open(msg.staging_path) as f:
             lines.extend(ln.rstrip("\n") for ln in f if ln.strip())
-        staged_paths.append(msg.staging_path)
     if lines:
-        if hasattr(log, "append_many_serialized"):
-            log.append_many_serialized(lines, maxlen=maxlen)
-        else:
-            log.append_many([json.loads(ln) for ln in lines], maxlen=maxlen)
-    for path in staged_paths:
-        os.remove(path)
+        log.append_many_serialized(lines, maxlen=maxlen)
+    _discard_staged(messages)
     return len(lines)
+
+
+def _discard_staged(messages) -> None:
+    """Remove the staging files of a committed, replayed or aborted epoch."""
+    for msg in messages:
+        if msg and os.path.exists(msg.staging_path):
+            os.remove(msg.staging_path)
 
 
 def _opts(options) -> tuple[str, str, str, int, str | None]:
@@ -273,9 +280,7 @@ class RedisLogBatchReader(DataSourceReader):
         ]
 
     def read(self, partition: RangePartition):
-        _drop_zip_importers()
-        log = connect_log(partition.root, partition.stream, url=partition.url)
-        yield from _arrow_batches(log.read_slice(partition.start, partition.end))
+        yield from _read_partition(partition)
 
 
 class RedisLogStreamReader(DataSourceStreamReader):
@@ -316,9 +321,7 @@ class RedisLogStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: RangePartition):
-        _drop_zip_importers()
-        log = connect_log(partition.root, partition.stream, url=partition.url)
-        yield from _arrow_batches(log.read_slice(partition.start, partition.end))
+        yield from _read_partition(partition)
 
     def commit(self, end: dict) -> None:
         """Epoch ack: everything below end.pos is processed (S7)."""
@@ -361,9 +364,7 @@ class RedisLogStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:
         marker = self._marker(batchId)
         if os.path.exists(marker):  # replayed epoch → already appended
-            for msg in messages:
-                if msg and os.path.exists(msg.staging_path):
-                    os.remove(msg.staging_path)
+            _discard_staged(messages)
             return
         log = connect_log(self.root, self.stream, url=self.url)
         appended = _append_staged(log, messages, self.maxlen)
@@ -375,9 +376,7 @@ class RedisLogStreamWriter(DataSourceStreamArrowWriter):
             f.write("ok")
 
     def abort(self, messages, batchId: int) -> None:
-        for msg in messages:
-            if msg and os.path.exists(msg.staging_path):
-                os.remove(msg.staging_path)
+        _discard_staged(messages)
 
 
 class RedisLogBatchWriter(DataSourceArrowWriter):
@@ -401,6 +400,4 @@ class RedisLogBatchWriter(DataSourceArrowWriter):
         _append_staged(log, messages, self.maxlen)
 
     def abort(self, messages) -> None:
-        for msg in messages:
-            if msg and os.path.exists(msg.staging_path):
-                os.remove(msg.staging_path)
+        _discard_staged(messages)

@@ -11,8 +11,9 @@ backend (``tests/test_parity_api.py`` is parametrized over both).
 Data plane (per stream, namespaced ``rss:{root}:{stream}``):
 
 - ``{ns}:log`` — a REAL Redis Stream.  ``append`` is an XADD with an
-  explicit id ``<ms>-<seq>`` minted exactly like the file backend
-  (reference producer.py:44-49); ``read_slice`` is an XRANGE;
+  explicit id ``<ms>-<seq>`` minted by the same
+  :func:`~redis_streams_spark.sources.stream_log.mint_ids` as the file
+  backend (reference producer.py:44-49); ``read_slice`` is an XRANGE;
   ``trim``/``maxlen`` is an exact XTRIM (reference producer.py:26-35
   uses ``MAXLEN ~`` approximate; ours is exact — the same strictly
   stronger guarantee the file backend documents).  The canonical
@@ -70,7 +71,11 @@ import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from redis_streams_spark.sources.stream_log import StreamLog
+from redis_streams_spark.sources.stream_log import (
+    StreamLog,
+    check_serialized,
+    mint_ids,
+)
 
 _LOCK_TTL_MS = 30_000  # crash-safety expiry; normal holds are ms-long
 _LOCK_WAIT_S = 30.0
@@ -301,12 +306,9 @@ class RedisStreamLog:
             return []
         with self.stream_lock() as lock:
             m = self._reconciled_meta()
-            ms = int(time.time() * 1000)
-            if ms < m["last_ms"]:  # clock step-back: stay monotonic
-                ms = m["last_ms"]
-            seq = m["last_seq"] + 1 if ms == m["last_ms"] else 0
+            first = m["appended"]
+            ms, seqs = mint_ids(m, len(contents))
             ids: list[str] = []
-            pos = m["appended"]
             # pipeline when the client offers one: a naive loop costs 2
             # network round trips PER MESSAGE (xadd + zadd) — exactly the
             # per-message XADD bound the reference lives with
@@ -318,7 +320,7 @@ class RedisStreamLog:
                 pipe_factory(transaction=False) if pipe_factory else self.client
             )
             idx_batch: dict[str, int] = {}
-            for content in contents:
+            for k, (content, seq) in enumerate(zip(contents, seqs)):
                 msgid = f"{ms}-{seq:06d}"
                 redis_id = f"{ms}-{seq}"
                 sink.xadd(
@@ -326,10 +328,8 @@ class RedisStreamLog:
                     {**{k: str(v) for k, v in content.items()}, "_msgid": msgid},
                     id=redis_id,
                 )
-                idx_batch[redis_id] = pos
+                idx_batch[redis_id] = first + k
                 ids.append(msgid)
-                seq += 1
-                pos += 1
             sink.zadd(self._k_idx, idx_batch)
             if len(contents) >= 5000:
                 # large epoch: buffering + flushing can approach the lock
@@ -338,11 +338,18 @@ class RedisStreamLog:
                 lock.renew()
             if sink is not self.client:
                 sink.execute()
-            m.update(appended=pos, last_ms=ms, last_seq=seq - 1)
             self._save_meta(m, lock)
             if maxlen is not None and m["appended"] - m["first_pos"] > maxlen:
                 self._trim_locked(maxlen, lock)
         return ids
+
+    def append_many_serialized(
+        self, payloads: list[str], maxlen: int | None = None
+    ) -> list[str]:
+        """Same surface as the file backend: shape-checked content JSON,
+        parsed into fields (Redis stores field/value pairs, not lines)."""
+        check_serialized(payloads)
+        return self.append_many([json.loads(p) for p in payloads], maxlen=maxlen)
 
     def read_slice(self, start_pos: int, end_pos: int) -> list[tuple[int, str, dict]]:
         """Messages with position in [start_pos, end_pos) as

@@ -9,7 +9,9 @@ Layout (one directory per stream):
 
 Semantics mirrored from the reference:
 - msgid is ``"<ms-epoch>-<seq>"``, monotonically increasing
-  (redis_streams_test/test_producer.py:14); seq disambiguates same-ms adds.
+  (redis_streams_test/test_producer.py:14); seq disambiguates same-ms adds,
+  and a clock step-back continues the last millisecond's sequence
+  (:func:`mint_ids`, shared with the Redis backend).
 - positions are global append indexes: they never shift on trim, exactly
   like Redis msgids (trim advances ``first_pos``;
   producer.py:26-35 ``maxlen``).
@@ -55,6 +57,32 @@ def _atomic_write(path: str, payload: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(payload, f)
     os.replace(tmp, path)
+
+
+def mint_ids(meta: dict, n: int) -> tuple[int, range]:
+    """Mint the ids of an ``n``-message batch from the meta blob, for both
+    backends: the batch shares one millisecond ``ms`` and takes the
+    sequence numbers ``seqs``; message ``k`` is ``f"{ms}-{seqs[k]:06d}"``.
+    ``ms`` never falls below the last minted one, so ids stay unique and
+    strictly increasing when the clock steps back.  Advances ``appended``,
+    ``last_ms`` and ``last_seq`` in ``meta``; the caller persists it."""
+    ms = max(int(time.time() * 1000), meta["last_ms"])
+    seq = meta["last_seq"] + 1 if ms == meta["last_ms"] else 0
+    meta.update(appended=meta["appended"] + n, last_ms=ms, last_seq=seq + n - 1)
+    return ms, range(seq, seq + n)
+
+
+def check_serialized(payloads: list[str]) -> None:
+    """Shape check for pre-serialized content payloads: each is spliced
+    into a line-oriented log, so it must be brace-delimited JSON object
+    text with no raw newline.  Cheap (no json.loads): a malformed payload
+    raises here instead of corrupting the log framing."""
+    for payload in payloads:
+        if "\n" in payload or not payload.startswith("{") or not payload.endswith("}"):
+            raise ValueError(
+                "append_many_serialized payload must be single-line "
+                f"JSON object text, got: {payload[:80]!r}"
+            )
 
 
 class StreamLog:
@@ -138,106 +166,50 @@ class StreamLog:
         is trimmed to the newest ``maxlen`` entries (reference
         producer.py:44-48 — ours is exact rather than ``MAXLEN ~``
         approximate: a strictly stronger guarantee, noted divergence)."""
-        with self.stream_lock():
-            m = self._meta()
-            ms = int(time.time() * 1000)
-            seq = m["last_seq"] + 1 if ms == m["last_ms"] else 0
-            msgid = f"{ms}-{seq:06d}"
-            payload = {
-                "msgid": msgid,
-                "content": {k: str(v) for k, v in content.items()},
-            }
-            with open(self.log_path, "a") as f:
-                f.write(json.dumps(payload) + "\n")
-            m.update(appended=m["appended"] + 1, last_ms=ms, last_seq=seq)
-            _atomic_write(self.meta_path, m)
-            if maxlen is not None and self.xlen() > maxlen:
-                self._trim_locked(maxlen)
-        return msgid
+        return self.append_many([content], maxlen)[0]
 
     def append_many(self, contents: list[dict], maxlen: int | None = None) -> list[str]:
         """Batch append: one meta write for the whole batch (the
         amortization the reference lacks — producer.py:44-49 is one XADD
         round trip per message)."""
-        if not contents:
-            return []
-        with self.stream_lock():
-            m = self._meta()
-            ms = int(time.time() * 1000)
-            seq = m["last_seq"] + 1 if ms == m["last_ms"] else 0
-            ids: list[str] = []
-            with open(self.log_path, "a") as f:
-                for content in contents:
-                    msgid = f"{ms}-{seq:06d}"
-                    ids.append(msgid)
-                    f.write(
-                        json.dumps(
-                            {
-                                "msgid": msgid,
-                                "content": {k: str(v) for k, v in content.items()},
-                            }
-                        )
-                        + "\n"
-                    )
-                    seq += 1
-            m.update(
-                appended=m["appended"] + len(contents), last_ms=ms, last_seq=seq - 1
-            )
-            _atomic_write(self.meta_path, m)
-            if maxlen is not None and self.xlen() > maxlen:
-                self._trim_locked(maxlen)
-        return ids
+        return self._append_payloads(
+            [json.dumps({k: str(v) for k, v in c.items()}) for c in contents], maxlen
+        )
 
     def append_many_serialized(
         self, payloads: list[str], maxlen: int | None = None
     ) -> list[str]:
         """Batch append of PRE-SERIALIZED content objects: each element
         is the JSON text of a ``{str: str}`` content dict (exactly what
-        ``json.dumps`` inside :meth:`append_many` would produce).  The
-        log line is spliced with string formatting — no per-message
-        parse/re-serialize on the hot sink path (round-9: the Spark sink
-        stages content JSON once at task side and the commit appends it
-        byte-for-byte; the read path does the only json.loads).  One
-        buffered write + one meta write for the whole batch.
+        ``json.dumps`` inside :meth:`append_many` would produce), spliced
+        into the log byte-for-byte — no per-message parse/re-serialize on
+        the hot sink path (the Spark sink stages content JSON once at task
+        side and the commit appends it; the read path does the only
+        json.loads).  Malformed payloads raise before anything is written
+        (:func:`check_serialized`)."""
+        check_serialized(payloads)
+        return self._append_payloads(payloads, maxlen)
 
-        Payloads are spliced into the line-oriented log byte-for-byte,
-        so each is cheaply validated up front (must be a brace-delimited
-        JSON object with no raw newline) — a malformed payload from a
-        future caller raises here instead of silently corrupting the
-        log framing (r09 advice).  The zero-reparse fast path is kept:
-        no json.loads, just shape checks."""
+    def _append_payloads(self, payloads: list[str], maxlen: int | None) -> list[str]:
+        """The one locked write every append goes through: mint the
+        batch's ids, one buffered write of the spliced lines, one meta
+        write, then trim."""
         if not payloads:
             return []
-        for payload in payloads:
-            if (
-                "\n" in payload
-                or not payload.startswith("{")
-                or not payload.endswith("}")
-            ):
-                raise ValueError(
-                    "append_many_serialized payload must be single-line "
-                    f"JSON object text, got: {payload[:80]!r}"
-                )
         with self.stream_lock():
             m = self._meta()
-            ms = int(time.time() * 1000)
-            seq = m["last_seq"] + 1 if ms == m["last_ms"] else 0
-            ids: list[str] = []
-            buf: list[str] = []
-            for payload in payloads:
-                msgid = f"{ms}-{seq:06d}"
-                ids.append(msgid)
-                buf.append(
-                    '{"msgid": "' + msgid + '", "content": ' + payload + "}\n"
-                )
-                seq += 1
+            ms, seqs = mint_ids(m, len(payloads))
+            ids = [f"{ms}-{seq:06d}" for seq in seqs]
+            # byte-identical to json.dumps({"msgid": id, "content": c})
             with open(self.log_path, "a") as f:
-                f.write("".join(buf))
-            m.update(
-                appended=m["appended"] + len(payloads), last_ms=ms, last_seq=seq - 1
-            )
+                f.write(
+                    "".join(
+                        '{"msgid": "' + msgid + '", "content": ' + payload + "}\n"
+                        for msgid, payload in zip(ids, payloads)
+                    )
+                )
             _atomic_write(self.meta_path, m)
-            if maxlen is not None and self.xlen() > maxlen:
+            if maxlen is not None and m["appended"] - m["first_pos"] > maxlen:
                 self._trim_locked(maxlen)
         return ids
 

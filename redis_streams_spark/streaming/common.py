@@ -41,6 +41,46 @@ def now_ms() -> int:
     return int(time.time() * 1000)
 
 
+def health_status(pending: int, idle: int, batch_size: int, idle_threshold: int) -> str:
+    """Consumer health for Monitor and MonitorListener: the pending check
+    takes priority over the idle check (monitor.py:85-91)."""
+    if pending > batch_size:
+        return Status.PENDING.value
+    if idle > idle_threshold:
+        return Status.IDLE.value
+    return Status.OK.value
+
+
+def scale_ladder(
+    length: int,
+    pending: int,
+    consumers: int,
+    scale_out_rate: int,
+    scale_in_rate: int,
+) -> tuple[float, str]:
+    """Scaling advice for Scaler and MonitorListener: the rate
+    ``round(clamp(length/pending*100, 1, 100), 4)`` (0 without pending,
+    scaler.py:74-83) on the reference's decision ladder (scaler.py:85-97),
+    after its threshold validation (scaler.py:65-72).  Returns
+    ``(rate, 'OUT'|'IN'|'NO_SCALE')``."""
+    if scale_in_rate > scale_out_rate:
+        raise ValueError("Scale out rate must be bigger than scale in rate")
+    if scale_in_rate < 0 or scale_in_rate > 100:
+        raise ValueError("Scale in rate must be within 0 and 100")
+    if scale_out_rate < 0 or scale_out_rate > 100:
+        raise ValueError("Scale out rate must be within 0 and 100")
+    rate = round(max(min(length / pending * 100, 100), 1), 4) if pending else 0
+    if rate == 0 and length == 0:
+        return rate, Scale.NOSCALE.value
+    if rate == 0 and length >= 1:
+        return rate, Scale.OUT.value
+    if rate < scale_in_rate and consumers > 1:
+        return rate, Scale.IN.value
+    if rate >= scale_out_rate:
+        return rate, Scale.OUT.value
+    return rate, Scale.NOSCALE.value
+
+
 class BaseStreamClass:
     """Creates the stream + consumer group idempotently on construction,
     delivering from the beginning of the stream (common.py:20-41: id
@@ -62,19 +102,18 @@ class BaseStreamClass:
     ) -> list[dict]:
         """Oldest ``item_count`` PEL rows owned by ``consumer_id`` in the
         reference's row shape (common.py:61-64)."""
-        state = self.log.group_state(self.consumer_group)
+        pel = self.log.group_state(self.consumer_group)["pel"]
+        mine = sorted(m for m, e in pel.items() if e["consumer"] == consumer_id)
         now = now_ms()
-        rows = [
+        return [
             {
                 "message_id": msgid,
-                "consumer": e["consumer"],
-                "time_since_delivered": now - e["delivered_ms"],
-                "times_delivered": e["times_delivered"],
+                "consumer": consumer_id,
+                "time_since_delivered": now - pel[msgid]["delivered_ms"],
+                "times_delivered": pel[msgid]["times_delivered"],
             }
-            for msgid, e in sorted(state["pel"].items())
-            if e["consumer"] == consumer_id
+            for msgid in mine[:item_count]
         ]
-        return rows[:item_count]
 
     def remove_consumer(self, consumer_to_delete: str) -> int:
         """XGROUP DELCONSUMER: drop the consumer and its PEL entries;

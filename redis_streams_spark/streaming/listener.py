@@ -17,7 +17,7 @@ import time
 
 from pyspark.sql.streaming import StreamingQueryListener
 
-from redis_streams_spark.streaming.common import Scale, Status
+from redis_streams_spark.streaming.common import health_status, scale_ladder
 from redis_streams_spark.streaming.monitor import ConsumerMetrics
 
 
@@ -75,7 +75,7 @@ class MonitorListener(StreamingQueryListener):
                 backlog += max(0, latest - end)
         self.backlog[qid] = backlog
         self.inflight[qid] = pending
-        status = self._status(pending=pending, idle=idle)
+        status = health_status(pending, idle, self.batch_size, self.idle_threshold)
         self._latest[qid] = ConsumerMetrics(
             consumer_id=qid, pending_items=pending, idle_time=idle, status=status
         )
@@ -86,34 +86,16 @@ class MonitorListener(StreamingQueryListener):
     def onQueryIdle(self, event) -> None:
         pass
 
-    # -- reference semantics --------------------------------------------
-    def _status(self, pending: int, idle: int) -> str:
-        if pending > self.batch_size:
-            return Status.PENDING.value
-        if idle > self.idle_threshold:
-            return Status.IDLE.value
-        return Status.OK.value
-
     def scale_decision(
         self, scale_out_rate: int = 50, scale_in_rate: int = 10
     ) -> tuple[float, str]:
-        """Scaler ladder (scaler.py:85-117) over listener-derived backlog
-        (= stream_length) and in-flight rows (= pending), with the number
-        of live queries as consumers_of_group."""
-        if scale_in_rate > scale_out_rate:
-            raise ValueError("Scale out rate must be bigger than scale in rate")
-        length = sum(self.backlog.values())
-        pending = sum(self.inflight.values())
-        consumers = len(self.last_progress_ms)
-        rate = (
-            round(max(min(length / pending * 100, 100), 1), 4) if pending else 0
+        """Scaler ladder (:func:`scale_ladder`) over listener-derived
+        backlog (= stream_length) and in-flight rows (= pending), with the
+        number of live queries as consumers_of_group."""
+        return scale_ladder(
+            sum(self.backlog.values()),
+            sum(self.inflight.values()),
+            len(self.last_progress_ms),
+            scale_out_rate,
+            scale_in_rate,
         )
-        if rate == 0 and length == 0:
-            return rate, Scale.NOSCALE.value
-        if rate == 0 and length >= 1:
-            return rate, Scale.OUT.value
-        if rate < scale_in_rate and consumers > 1:
-            return rate, Scale.IN.value
-        if rate >= scale_out_rate:
-            return rate, Scale.OUT.value
-        return rate, Scale.NOSCALE.value

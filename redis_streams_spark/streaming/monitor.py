@@ -18,10 +18,16 @@ from __future__ import annotations
 
 import json
 import sys
+from collections import Counter
 from dataclasses import dataclass
 
 from redis_streams_spark.sources.stream_log import StreamLog
-from redis_streams_spark.streaming.common import BaseStreamClass, Status, now_ms
+from redis_streams_spark.streaming.common import (
+    BaseStreamClass,
+    Status,
+    health_status,
+    now_ms,
+)
 
 
 @dataclass
@@ -63,12 +69,9 @@ class Monitor(BaseStreamClass):
         self.unhealthy_consumers: dict[str, dict[str, int]] = {}
 
     def _get_status_by_metrics(self, pending: int, idle: int) -> str:
-        """Pending check takes priority over idle (monitor.py:85-91)."""
-        if pending > self.batch_size:
-            return Status.PENDING.value
-        if idle > self.idle_time_ms_warning_threshold:
-            return Status.IDLE.value
-        return Status.OK.value
+        return health_status(
+            pending, idle, self.batch_size, self.idle_time_ms_warning_threshold
+        )
 
     def assign_items_to_active_consumer(
         self, items: list[dict], consumer_to_assign: str
@@ -123,7 +126,9 @@ class Monitor(BaseStreamClass):
 
     def collect_monitoring_data(self, auto_cleanup: bool = True) -> list[ConsumerMetrics]:
         """Sweep all groups of the stream: classify every consumer, pick
-        the assignee (min-pending healthy), optionally clean up
+        the assignee (min-pending healthy consumer of the monitored
+        group — a consumer of another group would hold the victims'
+        entries in a PEL it is not a member of), optionally clean up
         (monitor.py:140-193).  Default auto_cleanup=True matches the
         reference signature (monitor.py:140)."""
         self.collected_consumers_data = []
@@ -135,10 +140,9 @@ class Monitor(BaseStreamClass):
             state = self.log.group_state(group)
             if not state["consumers"]:
                 continue
+            pending_of = Counter(e["consumer"] for e in state["pel"].values())
             for consumer_id in sorted(state["consumers"]):
-                pending = sum(
-                    1 for e in state["pel"].values() if e["consumer"] == consumer_id
-                )
+                pending = pending_of[consumer_id]
                 idle = now - state["consumers"][consumer_id].get("last_seen_ms", now)
                 status = self._get_status_by_metrics(pending=pending, idle=idle)
                 self.collected_consumers_data.append(
@@ -149,11 +153,13 @@ class Monitor(BaseStreamClass):
                         status=status,
                     )
                 )
+                if group != self.consumer_group:
+                    continue
                 if status == Status.OK.value:
                     if best_pending is None or pending < best_pending:
                         best_pending = pending
                         self.consumer_to_assign = consumer_id
-                elif group == self.consumer_group:
+                else:
                     self.unhealthy_consumers.setdefault(group, {})[
                         consumer_id
                     ] = pending

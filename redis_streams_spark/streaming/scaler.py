@@ -15,7 +15,7 @@ off-by-one undercount (test_scaler.py:125-126).
 from __future__ import annotations
 
 from redis_streams_spark.sources.stream_log import StreamLog
-from redis_streams_spark.streaming.common import BaseStreamClass, Scale
+from redis_streams_spark.streaming.common import BaseStreamClass, scale_ladder
 
 
 class Scaler(BaseStreamClass):
@@ -35,44 +35,19 @@ class Scaler(BaseStreamClass):
         self.stream_length = max(0, self.log.count() - state["last_delivered_pos"])
         return self.stream_length, self.stream_pending
 
-    @staticmethod
-    def _validate_scaling_params(scale_out_rate: int, scale_in_rate: int) -> None:
-        if scale_in_rate > scale_out_rate:
-            raise ValueError("Scale out rate must be bigger than scale in rate")
-        if scale_in_rate < 0 or scale_in_rate > 100:
-            raise ValueError("Scale in rate must be within 0 and 100")
-        if scale_out_rate < 0 or scale_out_rate > 100:
-            raise ValueError("Scale out rate must be within 0 and 100")
-
-    def _calculate_rate(self) -> None:
-        if not all([self.stream_pending, self.stream_length]):
-            self.collect_metrics()
-        if self.stream_pending:
-            self.length_pending_rate = round(
-                max(min(self.stream_length / self.stream_pending * 100, 100), 1), 4
-            )
-        else:
-            self.length_pending_rate = 0
-
-    def _calculate_scale(self, scale_in_rate: int, scale_out_rate: int) -> str:
-        if self.length_pending_rate == 0 and self.stream_length == 0:
-            return Scale.NOSCALE.value
-        if self.length_pending_rate == 0 and self.stream_length >= 1:
-            return Scale.OUT.value
-        if self.length_pending_rate < scale_in_rate and self.consumers_of_group > 1:
-            return Scale.IN.value
-        if self.length_pending_rate >= scale_out_rate:
-            return Scale.OUT.value
-        return Scale.NOSCALE.value
-
     def get_scale_decision(
         self, scale_out_rate: int = 50, scale_in_rate: int = 10
     ) -> tuple[float, str]:
-        """Returns (rate, 'OUT'|'IN'|'NO_SCALE')."""
-        self._validate_scaling_params(
-            scale_out_rate=scale_out_rate, scale_in_rate=scale_in_rate
+        """Returns (rate, 'OUT'|'IN'|'NO_SCALE') from :func:`scale_ladder`;
+        metrics are re-collected only when either is falsy (the
+        reference's lazy quirk)."""
+        if not all([self.stream_pending, self.stream_length]):
+            self.collect_metrics()
+        self.length_pending_rate, decision = scale_ladder(
+            self.stream_length,
+            self.stream_pending,
+            self.consumers_of_group,
+            scale_out_rate,
+            scale_in_rate,
         )
-        self._calculate_rate()
-        return self.length_pending_rate, self._calculate_scale(
-            scale_in_rate=scale_in_rate, scale_out_rate=scale_out_rate
-        )
+        return self.length_pending_rate, decision

@@ -1,11 +1,14 @@
 """MonitorListener fed with fake progress events (no Spark session): it
 keeps one health row per query, the latest, however many progress events
-a long-running query reports."""
+a long-running query reports, and it advises scaling with the Scaler's
+validation."""
 
 from __future__ import annotations
 
 import json
 from types import SimpleNamespace
+
+import pytest
 
 from redis_streams_spark.streaming.listener import MonitorListener
 
@@ -31,3 +34,11 @@ def test_metrics_keep_latest_row_per_query():
     assert b.pending_items == 50 and b.status == "WARNING - too many pending items"
     assert listener.metrics[:5] == [a, b]
     assert listener.backlog == {"a": 0, "b": 10}
+
+
+def test_scale_decision_validates_rates_like_scaler():
+    listener = MonitorListener()
+    with pytest.raises(ValueError, match="Scale out rate must be within 0 and 100"):
+        listener.scale_decision(scale_out_rate=150)
+    with pytest.raises(ValueError, match="Scale in rate must be within 0 and 100"):
+        listener.scale_decision(scale_in_rate=-1)

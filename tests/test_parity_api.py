@@ -224,6 +224,30 @@ def test_monitor_auto_cleanup_default_true(log):
     assert {e["consumer"] for e in state["pel"].values()} == {"healthy"}
 
 
+def test_monitor_assignee_comes_from_the_monitored_group(log):
+    """The victims' entries stay in their group's PEL, so the assignee
+    must be a member of that group: a healthy consumer of another group
+    is never picked (it would own entries no sweep of its group lists)."""
+    seed(log, 6)
+    Consumer(log, "teststream", "A", consumer_id="a1", batch_size=4,
+             max_wait_time_ms=100).get_items()
+    Consumer(log, "teststream", "B", consumer_id="b1", batch_size=1,
+             max_wait_time_ms=100).get_items()
+
+    def idle(state: dict) -> None:
+        state["consumers"]["a1"]["last_seen_ms"] = 0
+
+    log.update_group("A", idle)
+    mon = Monitor(log, "teststream", "A", batch_size=2, min_wait_time_ms=0)
+    data = mon.collect_monitoring_data()
+    assert {m.consumer_id for m in data} == {"a1", "b1"}  # sweep sees both
+    assert mon.consumer_to_assign == ""
+    state = log.group_state("A")
+    assert "a1" in state["consumers"]
+    assert [e["consumer"] for e in state["pel"].values()] == ["a1"] * 4
+    assert list(log.group_state("B")["consumers"]) == ["b1"]
+
+
 # -- scaler (test_scaler.py:11-144 parity) ------------------------------
 
 def _scaler_with(log, n_msgs, n_claimed, consumers):

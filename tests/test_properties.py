@@ -4,11 +4,19 @@ append/trim algebra, cross-engine rounding parity on arbitrary floats."""
 
 from __future__ import annotations
 
+import itertools
+import os
+from types import SimpleNamespace
+from unittest import mock
+
 import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from redis_streams_spark.sources import stream_log
+from redis_streams_spark.sources.fake_redis import FakeRedis
+from redis_streams_spark.sources.redis_log import RedisStreamLog
 from redis_streams_spark.sources.stream_log import StreamLog
 from redis_streams_spark.streaming import Scale
 from redis_streams_spark.streaming.scaler import Scaler
@@ -67,20 +75,40 @@ def test_scaler_ladder_invariants(length, pending, consumers, out_rate, in_rate)
 @given(
     n_msgs=st.integers(min_value=0, max_value=40),
     maxlen=st.integers(min_value=1, max_value=10),
+    # clock readings in ms, in append order (cycled); steps back freely
+    ticks=st.lists(
+        st.integers(min_value=1_000_000, max_value=1_000_005), min_size=1, max_size=8
+    ),
 )
-def test_streamlog_append_trim_algebra(tmp_path_factory, n_msgs, maxlen):
-    log = StreamLog(str(tmp_path_factory.mktemp("sl")), "s")
-    ids = [log.append({"i": i}) for i in range(n_msgs)]
-    assert ids == sorted(ids) and len(set(ids)) == n_msgs
-    log.trim(maxlen)
-    assert log.xlen() == min(n_msgs, maxlen)
-    assert log.count() == n_msgs  # positions never shift
-    kept = log.read_slice(0, log.count())
-    if n_msgs:
-        # newest messages retained, in order
-        assert [c["i"] for _, _, c in kept] == [
-            str(i) for i in range(max(0, n_msgs - maxlen), n_msgs)
-        ]
+def test_streamlog_append_trim_algebra(tmp_path_factory, n_msgs, maxlen, ticks):
+    """Runs on both backends, which must also mint the same ids."""
+    root = str(tmp_path_factory.mktemp("sl"))
+    server = f"props-{os.path.basename(root)}"
+    minted = []
+    try:
+        for log in (
+            StreamLog(root, "s"),
+            RedisStreamLog(root, "s", client=FakeRedis(server)),
+        ):
+            clock = itertools.cycle(ticks)
+            with mock.patch.object(
+                stream_log, "time", SimpleNamespace(time=lambda: next(clock) / 1000)
+            ):
+                ids = [log.append({"i": i}) for i in range(n_msgs)]
+            assert ids == sorted(ids) and len(set(ids)) == n_msgs
+            minted.append(ids)
+            log.trim(maxlen)
+            assert log.xlen() == min(n_msgs, maxlen)
+            assert log.count() == n_msgs  # positions never shift
+            kept = log.read_slice(0, log.count())
+            if n_msgs:
+                # newest messages retained, in order
+                assert [c["i"] for _, _, c in kept] == [
+                    str(i) for i in range(max(0, n_msgs - maxlen), n_msgs)
+                ]
+    finally:
+        FakeRedis.reset_server(server)
+    assert minted[0] == minted[1]
 
 
 @settings(max_examples=200, deadline=None)
