@@ -7,6 +7,7 @@ Citations refer to /root/reference/redis_streams/ for behavioral parity
 from __future__ import annotations
 
 import time
+from collections.abc import Iterable
 from dataclasses import dataclass
 from enum import Enum
 
@@ -81,6 +82,140 @@ def scale_ladder(
     return rate, Scale.NOSCALE.value
 
 
+# -- the PEL (pending entries list) --------------------------------------
+# Only the functions below know its layout.  ``state["pel"]`` maps each
+# consumer with pending entries to parallel columns in position order:
+#     {consumer: {"pos": [..], "ids": [msgid, ..], "delivered_ms": [..],
+#                 "times_delivered": [..]}}
+# A consumer's key goes once its last entry leaves, so an empty PEL is an
+# empty dict.  Columns keep a group-state rewrite cheap to encode and
+# decode; a file in the earlier one-object-per-message layout
+# ({msgid: {"pos", "consumer", "delivered_ms", "times_delivered"}}) is
+# converted by the first PEL function that touches it.
+
+_COLUMNS = ("pos", "ids", "delivered_ms", "times_delivered")
+
+
+def _pel(state: dict) -> dict:
+    pel = state["pel"]
+    if pel and "ids" not in next(iter(pel.values())):
+        rows: dict[str, list] = {}
+        for msgid, e in sorted(pel.items(), key=lambda kv: kv[1]["pos"]):
+            rows.setdefault(e["consumer"], []).append(
+                (e["pos"], msgid, e["delivered_ms"], e["times_delivered"])
+            )
+        state["pel"] = pel = {}
+        for consumer, own in rows.items():
+            _put_rows(pel, consumer, own)
+    return pel
+
+
+def _rows(cols: dict | None) -> list[tuple[int, str, int, int]]:
+    """(pos, msgid, delivered_ms, times_delivered) per entry."""
+    return list(zip(*(cols[c] for c in _COLUMNS))) if cols else []
+
+
+def _put_rows(pel: dict, consumer: str, rows: list) -> None:
+    if rows:
+        pel[consumer] = dict(zip(_COLUMNS, map(list, zip(*rows))))
+    else:
+        pel.pop(consumer, None)
+
+
+def _give(pel: dict, consumer: str, rows: list) -> None:
+    """Merge ``rows`` into ``consumer``'s entries, in position order."""
+    if rows:
+        _put_rows(pel, consumer, sorted(_rows(pel.get(consumer)) + rows))
+
+
+def _take(pel: dict, pick) -> list[tuple[int, str, int, int]]:
+    """Remove and return the entries (rows) for which ``pick`` holds."""
+    taken = []
+    for consumer in list(pel):
+        keep, out = [], []
+        for row in _rows(pel[consumer]):
+            (out if pick(row) else keep).append(row)
+        if out:
+            taken += out
+            _put_rows(pel, consumer, keep)
+    return taken
+
+
+def pel_claim(
+    state: dict, consumer: str, rows: Iterable[tuple[int, str]], now: int
+) -> None:
+    """Add freshly delivered ``(pos, msgid)`` rows to ``consumer``'s
+    entries (the '>' read of XREADGROUP): delivered now, once."""
+    _give(_pel(state), consumer, [(pos, msgid, now, 1) for pos, msgid in rows])
+
+
+def pel_own(
+    state: dict, consumer: str, n: int, redeliver: bool = False
+) -> tuple[list[tuple[int, str]], int]:
+    """``consumer``'s oldest ``n`` entries as ``(pos, msgid)`` and its
+    total pending count (the '0' re-read of XREADGROUP).  With
+    ``redeliver`` those ``n`` are handed out again: their
+    ``times_delivered`` goes up by one."""
+    cols = _pel(state).get(consumer)
+    if not cols:
+        return [], 0
+    if redeliver:
+        times = cols["times_delivered"]
+        for k in range(min(n, len(times))):
+            times[k] += 1
+    return list(zip(cols["pos"][:n], cols["ids"][:n])), len(cols["ids"])
+
+
+def pel_ack(state: dict, msgids: Iterable[str]) -> int:
+    """XACK: drop the given entries, whoever owns them; returns how
+    many were pending."""
+    todo = set(msgids)
+    return len(_take(_pel(state), lambda row: row[1] in todo))
+
+
+def pel_scan(state: dict, consumer: str | None = None) -> dict[str, dict]:
+    """XPENDING: msgid -> ``{"pos", "consumer", "delivered_ms",
+    "times_delivered"}``, of one consumer or of the whole group, each
+    consumer's entries in position order."""
+    pel = _pel(state)
+    owners = [consumer] if consumer is not None else list(pel)
+    return {
+        msgid: {
+            "pos": pos,
+            "consumer": owner,
+            "delivered_ms": delivered,
+            "times_delivered": times,
+        }
+        for owner in owners
+        for pos, msgid, delivered, times in _rows(pel.get(owner))
+    }
+
+
+def pel_counts(state: dict) -> dict[str, int]:
+    """Pending entries per consumer (consumers with none are absent)."""
+    return {consumer: len(cols["ids"]) for consumer, cols in _pel(state).items()}
+
+
+def pel_reown(
+    state: dict, msgids: Iterable[str], consumer: str, min_idle_ms: int, now: int
+) -> int:
+    """XCLAIM with min-idle-time: give ``consumer`` those of the entries
+    that were delivered at least ``min_idle_ms`` before ``now`` (fresher
+    ones may still be in work), as delivered now once more.  Returns the
+    number re-owned."""
+    todo = set(msgids)
+    pel = _pel(state)
+    moved = _take(pel, lambda row: row[1] in todo and now - row[2] >= min_idle_ms)
+    _give(pel, consumer, [(pos, msgid, now, times + 1) for pos, msgid, _, times in moved])
+    return len(moved)
+
+
+def pel_evict(state: dict, consumer: str) -> int:
+    """Drop all of ``consumer``'s entries; returns how many there were."""
+    cols = _pel(state).pop(consumer, None)
+    return len(cols["ids"]) if cols else 0
+
+
 class BaseStreamClass:
     """Creates the stream + consumer group idempotently on construction,
     delivering from the beginning of the stream (common.py:20-41: id
@@ -102,17 +237,16 @@ class BaseStreamClass:
     ) -> list[dict]:
         """Oldest ``item_count`` PEL rows owned by ``consumer_id`` in the
         reference's row shape (common.py:61-64)."""
-        pel = self.log.group_state(self.consumer_group)["pel"]
-        mine = sorted(m for m, e in pel.items() if e["consumer"] == consumer_id)
+        mine = pel_scan(self.log.group_state(self.consumer_group), consumer_id)
         now = now_ms()
         return [
             {
                 "message_id": msgid,
                 "consumer": consumer_id,
-                "time_since_delivered": now - pel[msgid]["delivered_ms"],
-                "times_delivered": pel[msgid]["times_delivered"],
+                "time_since_delivered": now - e["delivered_ms"],
+                "times_delivered": e["times_delivered"],
             }
-            for msgid in mine[:item_count]
+            for msgid, e in list(mine.items())[:item_count]
         ]
 
     def remove_consumer(self, consumer_to_delete: str) -> int:
@@ -120,14 +254,7 @@ class BaseStreamClass:
         returns the number of pending messages lost with it
         (common.py:75-85)."""
         def evict(state: dict) -> int:
-            lost = [
-                m
-                for m, e in state["pel"].items()
-                if e["consumer"] == consumer_to_delete
-            ]
-            for m in lost:
-                del state["pel"][m]
             state["consumers"].pop(consumer_to_delete, None)
-            return len(lost)
+            return pel_evict(state, consumer_to_delete)
 
         return self.log.update_group(self.consumer_group, evict)

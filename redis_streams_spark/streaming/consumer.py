@@ -30,7 +30,14 @@ import warnings
 from typing import Union
 
 from redis_streams_spark.sources.stream_log import StreamLog
-from redis_streams_spark.streaming.common import BaseStreamClass, RedisMsg, now_ms
+from redis_streams_spark.streaming.common import (
+    BaseStreamClass,
+    RedisMsg,
+    now_ms,
+    pel_ack,
+    pel_claim,
+    pel_own,
+)
 
 
 class Consumer(BaseStreamClass):
@@ -85,16 +92,8 @@ class Consumer(BaseStreamClass):
         serialization of XREADGROUP); it only mutates ``state``, so it
         is safe to re-run."""
         self._touch(state)
-        pel = state["pel"]
-        own = sorted(
-            (e["pos"], msgid)
-            for msgid, e in pel.items()
-            if e["consumer"] == self.consumer_id
-        )
-        if first:
-            for _, msgid in own[: self.batch_size]:
-                pel[msgid]["times_delivered"] += 1
-        want = max(0, self.batch_size - len(own))
+        own, pending = pel_own(state, self.consumer_id, self.batch_size, redeliver=first)
+        want = max(0, self.batch_size - pending)
         rows = []
         if want:
             start = state["last_delivered_pos"]
@@ -105,19 +104,13 @@ class Consumer(BaseStreamClass):
                 # read, claim from the oldest surviving entry
                 start = max(start, self.log.first_pos())
                 rows = self.log.read_slice(start, min(start + want, end))
-        t = now_ms()
-        for pos, msgid, _ in rows:
-            pel[msgid] = {
-                "pos": pos,
-                "consumer": self.consumer_id,
-                "delivered_ms": t,
-                "times_delivered": 1,
-            }
-            state["last_delivered_pos"] = pos + 1
+        claimed = [(pos, msgid) for pos, msgid, _ in rows]
+        pel_claim(state, self.consumer_id, claimed, now_ms())
+        if rows:
+            state["last_delivered_pos"] = rows[-1][0] + 1
         # the cursor only advances, so every claimed row sorts after
         # every entry already in the PEL
-        mine = (own + [(pos, msgid) for pos, msgid, _ in rows])[: self.batch_size]
-        return mine, rows
+        return (own + claimed)[: self.batch_size], rows
 
     # -- public API ------------------------------------------------------
     def get_items(self) -> list[RedisMsg]:
@@ -152,21 +145,16 @@ class Consumer(BaseStreamClass):
         in the stream (physical deletion is a retention concern —
         consumer.py:184-187 points at xdel/compaction)."""
         return self.log.update_group(
-            self.consumer_group,
-            lambda state: 1 if state["pel"].pop(item_id, None) is not None else 0,
+            self.consumer_group, lambda state: pel_ack(state, [item_id])
         )
 
     def remove_items_from_consumer_group(self, item_ids: list[str]) -> int:
         """Batch XACK (engine extension): one locked state update for a
         whole batch — the high-throughput ack path (the reference only
         offers per-item ack; per-item remains for parity)."""
-
-        def ack_all(state: dict) -> int:
-            return sum(
-                1 for i in item_ids if state["pel"].pop(i, None) is not None
-            )
-
-        return self.log.update_group(self.consumer_group, ack_all)
+        return self.log.update_group(
+            self.consumer_group, lambda state: pel_ack(state, item_ids)
+        )
 
     def remove_item_from_stream(self, item_id: str) -> int:
         """Deprecated alias kept for API parity (consumer.py:193-207)."""

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import json
 import sys
-from collections import Counter
 from dataclasses import dataclass
 
 from redis_streams_spark.sources.stream_log import StreamLog
@@ -27,6 +26,9 @@ from redis_streams_spark.streaming.common import (
     Status,
     health_status,
     now_ms,
+    pel_counts,
+    pel_reown,
+    pel_scan,
 )
 
 
@@ -79,42 +81,35 @@ class Monitor(BaseStreamClass):
         """XCLAIM with min_idle_time: re-own entries idle for at least
         min_wait_time_ms (fresher ones may still be processing); bumps the
         delivery counter.  Returns claimed count."""
-        def claim(state: dict) -> int:
-            claimed = 0
-            for item in items:
-                msgid = item["message_id"]
-                entry = state["pel"].get(msgid)
-                if entry is None:
-                    continue
-                if now_ms() - entry["delivered_ms"] < self.min_wait_time_ms:
-                    continue
-                entry["consumer"] = consumer_to_assign
-                entry["delivered_ms"] = now_ms()
-                entry["times_delivered"] += 1
-                claimed += 1
-            return claimed
-
-        return self.log.update_group(self.consumer_group, claim)
+        msgids = [item["message_id"] for item in items]
+        return self.log.update_group(
+            self.consumer_group,
+            lambda state: pel_reown(
+                state, msgids, consumer_to_assign, self.min_wait_time_ms, now_ms()
+            ),
+        )
 
     def cleanup_unhealthy_consumer(
         self, pending_count: int, consumer_to_delete: str
     ) -> None:
-        """① scan victim PEL → ② claim to assignee → ③ delete consumer,
-        logging any messages lost with it (monitor.py:93-127)."""
-        items = self.get_pending_items_of_consumer(
-            item_count=pending_count, consumer_id=consumer_to_delete
-        )
-        if self.consumer_to_assign:
-            self.assign_items_to_active_consumer(
-                items=items, consumer_to_assign=self.consumer_to_assign
-            )
-        lost = self.remove_consumer(consumer_to_delete=consumer_to_delete)
-        if lost:
-            print(
-                f"Removed consumer {consumer_to_delete} had {lost} pending "
-                "messages which are lost now",
-                file=sys.stderr,
-            )
+        """In one group-state transaction: ① scan the victim's oldest
+        ``pending_count`` entries → ② XCLAIM them to the assignee →
+        ③ delete the victim once it holds no entries (monitor.py:93-127).
+        Unlike the reference, which deletes the victim with whatever
+        entries were too fresh to claim and logs them as lost, a victim
+        still holding entries stays registered, so a later sweep can
+        re-own them: the group cursor is past them, and a deleted owner
+        would leave them undelivered for good."""
+        assignee = self.consumer_to_assign
+
+        def reown_then_evict(state: dict) -> None:
+            if assignee:
+                oldest = list(pel_scan(state, consumer_to_delete))[:pending_count]
+                pel_reown(state, oldest, assignee, self.min_wait_time_ms, now_ms())
+            if consumer_to_delete not in pel_counts(state):
+                state["consumers"].pop(consumer_to_delete, None)
+
+        self.log.update_group(self.consumer_group, reown_then_evict)
 
     def cleanup(self) -> None:
         for group, victims in list(self.unhealthy_consumers.items()):
@@ -140,9 +135,9 @@ class Monitor(BaseStreamClass):
             state = self.log.group_state(group)
             if not state["consumers"]:
                 continue
-            pending_of = Counter(e["consumer"] for e in state["pel"].values())
+            pending_of = pel_counts(state)
             for consumer_id in sorted(state["consumers"]):
-                pending = pending_of[consumer_id]
+                pending = pending_of.get(consumer_id, 0)
                 idle = now - state["consumers"][consumer_id].get("last_seen_ms", now)
                 status = self._get_status_by_metrics(pending=pending, idle=idle)
                 self.collected_consumers_data.append(

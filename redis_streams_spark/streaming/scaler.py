@@ -15,7 +15,11 @@ off-by-one undercount (test_scaler.py:125-126).
 from __future__ import annotations
 
 from redis_streams_spark.sources.stream_log import StreamLog
-from redis_streams_spark.streaming.common import BaseStreamClass, scale_ladder
+from redis_streams_spark.streaming.common import (
+    BaseStreamClass,
+    pel_counts,
+    scale_ladder,
+)
 
 
 class Scaler(BaseStreamClass):
@@ -30,7 +34,7 @@ class Scaler(BaseStreamClass):
         """(backlog length, pending) — metadata-only, no materialization:
         length = appended − last_delivered_pos; pending = |PEL|."""
         state = self.log.group_state(self.consumer_group)
-        self.stream_pending = len(state["pel"])
+        self.stream_pending = sum(pel_counts(state).values())
         self.consumers_of_group = len(state["consumers"])
         self.stream_length = max(0, self.log.count() - state["last_delivered_pos"])
         return self.stream_length, self.stream_pending

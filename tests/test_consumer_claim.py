@@ -12,6 +12,7 @@ import pytest
 
 from redis_streams_spark.sources.stream_log import StreamLog
 from redis_streams_spark.streaming import Consumer, Monitor, Producer
+from redis_streams_spark.streaming.common import pel_scan
 
 
 @pytest.fixture(params=["file", "fakeredis"])
@@ -77,7 +78,7 @@ def test_unacked_batch_redelivered_in_order(log):
     assert len(first) == 5
     for k in (2, 3):
         assert [(m.msgid, m.content) for m in con.get_items()] == first
-        pel = log.group_state("grp")["pel"]
+        pel = pel_scan(log.group_state("grp"))
         assert [pel[msgid]["times_delivered"] for msgid, _ in first] == [k] * 5
 
 
@@ -96,7 +97,7 @@ def test_xclaimed_entries_in_next_batch(log):
     moved = b.get_items()
     assert [m.msgid for m in moved] == ids[:4]
     assert [m.content for m in moved] == [{"i": str(i)} for i in range(4)]
-    assert {e["consumer"] for e in log.group_state("grp")["pel"].values()} == {"b"}
+    assert {e["consumer"] for e in pel_scan(log.group_state("grp")).values()} == {"b"}
 
 
 def test_many_consumers_claim_each_message_once(log):
@@ -128,7 +129,7 @@ def test_many_consumers_claim_each_message_once(log):
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert sorted(got) == sorted(ids)
-    assert log.group_state("grp")["pel"] == {}
+    assert pel_scan(log.group_state("grp")) == {}
 
 
 def test_cursor_behind_trim_point_claims_oldest_survivor(log):

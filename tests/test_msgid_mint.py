@@ -18,6 +18,7 @@ from redis_streams_spark.sources.fake_redis import FakeRedis
 from redis_streams_spark.sources.redis_log import RedisStreamLog
 from redis_streams_spark.sources.stream_log import StreamLog
 from redis_streams_spark.streaming import Consumer
+from redis_streams_spark.streaming.common import pel_scan
 
 
 def clock(seconds: list[float]):
@@ -56,7 +57,7 @@ def test_clock_step_back_keeps_ids_unique_and_increasing(log):
     ]
     # the PEL is keyed by msgid: a repeated id would overwrite an entry
     Consumer(log, "s", "g", consumer_id="c", batch_size=5, max_wait_time_ms=50).get_items()
-    assert sorted(log.group_state("g")["pel"]) == ids
+    assert list(pel_scan(log.group_state("g"))) == ids
 
 
 def test_file_log_lines_are_plain_json_records(tmp_path):

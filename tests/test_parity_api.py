@@ -23,6 +23,7 @@ from redis_streams_spark.streaming import (
     Scaler,
     Status,
 )
+from redis_streams_spark.streaming.common import pel_scan
 
 TEST_DATASET = [{"test": "data1"}, {"test": "data2"}]
 
@@ -89,7 +90,7 @@ def test_consumer_full_batch(log):
     assert items[0].content == {"test": "data1"}
     for it in items:
         assert con.remove_item_from_consumer_group(it.msgid) == 1
-    assert log.group_state("grp")["pel"] == {}
+    assert pel_scan(log.group_state("grp")) == {}
 
 
 def test_consumer_deadline_partial_batch(log):
@@ -130,7 +131,7 @@ def test_consumer_redelivery_of_unacked(log):
     again = con.get_items()  # crash-recovery read: same messages again
     assert [m.msgid for m in again] == [m.msgid for m in first]
     state = log.group_state("grp")
-    assert all(e["times_delivered"] >= 2 for e in state["pel"].values())
+    assert all(e["times_delivered"] >= 2 for e in pel_scan(state).values())
 
 
 def test_pending_visibility_and_lost_count(log):
@@ -198,9 +199,9 @@ def test_monitor_cleanup_reassigns_to_min_pending_healthy(log):
     mon.collect_monitoring_data(auto_cleanup=True)
     state = log.group_state("grp")
     assert "victim" not in state["consumers"]
-    owners = {e["consumer"] for e in state["pel"].values()}
+    owners = {e["consumer"] for e in pel_scan(state).values()}
     assert owners == {"healthy"}  # claimed, not lost
-    assert len(state["pel"]) == 5  # victim's 4 reassigned + healthy's own 1
+    assert len(pel_scan(state)) == 5  # victim's 4 reassigned + healthy's own 1
 
 
 def test_monitor_auto_cleanup_default_true(log):
@@ -221,7 +222,29 @@ def test_monitor_auto_cleanup_default_true(log):
     mon.collect_monitoring_data()  # no args: default must clean up
     state = log.group_state("grp")
     assert "victim" not in state["consumers"]
-    assert {e["consumer"] for e in state["pel"].values()} == {"healthy"}
+    assert {e["consumer"] for e in pel_scan(state).values()} == {"healthy"}
+
+
+def test_monitor_cleanup_keeps_entries_too_fresh_to_reassign(log):
+    """A sweep right after the victim's claim may re-own none of its
+    entries (min_wait_time_ms): the victim and its entries stay, so a
+    later sweep hands them on instead of them being lost for good (the
+    group cursor is already past them)."""
+    seed(log, 6)
+    Consumer(log, "teststream", "grp", consumer_id="v", batch_size=4,
+             max_wait_time_ms=100).get_items()
+    Consumer(log, "teststream", "grp", consumer_id="h", batch_size=1,
+             max_wait_time_ms=100).get_items()
+    mon = Monitor(log, "teststream", "grp", batch_size=2)
+    mon.collect_monitoring_data()
+    assert mon.consumer_to_assign == "h"
+    assert len(mon.get_pending_items_of_consumer(10, "v")) == 4
+    assert "v" in log.group_state("grp")["consumers"]
+    mon.min_wait_time_ms = 0
+    mon.collect_monitoring_data()
+    state = log.group_state("grp")
+    assert "v" not in state["consumers"]
+    assert [e["consumer"] for e in pel_scan(state).values()] == ["h"] * 5
 
 
 def test_monitor_assignee_comes_from_the_monitored_group(log):
@@ -244,7 +267,7 @@ def test_monitor_assignee_comes_from_the_monitored_group(log):
     assert mon.consumer_to_assign == ""
     state = log.group_state("A")
     assert "a1" in state["consumers"]
-    assert [e["consumer"] for e in state["pel"].values()] == ["a1"] * 4
+    assert [e["consumer"] for e in pel_scan(state).values()] == ["a1"] * 4
     assert list(log.group_state("B")["consumers"]) == ["b1"]
 
 

@@ -1,11 +1,13 @@
 """Property-based tests (hypothesis): invariants the example-driven suite
 can't sweep — scaler ladder over the whole metric space, StreamLog
-append/trim algebra, cross-engine rounding parity on arbitrary floats."""
+append/trim algebra, the PEL functions against a plain msgid dict,
+cross-engine rounding parity on arbitrary floats."""
 
 from __future__ import annotations
 
 import itertools
 import os
+from collections import Counter
 from types import SimpleNamespace
 from unittest import mock
 
@@ -18,7 +20,16 @@ from redis_streams_spark.sources import stream_log
 from redis_streams_spark.sources.fake_redis import FakeRedis
 from redis_streams_spark.sources.redis_log import RedisStreamLog
 from redis_streams_spark.sources.stream_log import StreamLog
-from redis_streams_spark.streaming import Scale
+from redis_streams_spark.streaming import Consumer, Scale
+from redis_streams_spark.streaming.common import (
+    pel_ack,
+    pel_claim,
+    pel_counts,
+    pel_evict,
+    pel_own,
+    pel_reown,
+    pel_scan,
+)
 from redis_streams_spark.streaming.scaler import Scaler
 
 
@@ -109,6 +120,148 @@ def test_streamlog_append_trim_algebra(tmp_path_factory, n_msgs, maxlen, ticks):
     finally:
         FakeRedis.reset_server(server)
     assert minted[0] == minted[1]
+
+
+def _both_backends(root: str, server: str):
+    return (
+        StreamLog(root, "s"),
+        RedisStreamLog(root, "s", client=FakeRedis(server)),
+    )
+
+
+_N_MSGS = 12
+_CONSUMERS = st.sampled_from(["a", "b", "c"])
+_MSG_IDX = st.lists(st.integers(min_value=0, max_value=_N_MSGS - 1), max_size=6)
+_PEL_OPS = st.lists(
+    st.one_of(
+        st.tuples(st.just("claim"), _CONSUMERS, st.integers(min_value=0, max_value=5)),
+        st.tuples(st.just("own"), _CONSUMERS, st.integers(min_value=0, max_value=5)),
+        st.tuples(st.just("ack"), _MSG_IDX),
+        st.tuples(
+            # min-idle on the 10-ms step of the clock: hits the boundary
+            st.just("xclaim"), _MSG_IDX, _CONSUMERS, st.sampled_from([0, 10, 20, 30])
+        ),
+        st.tuples(st.just("remove"), _CONSUMERS),
+    ),
+    max_size=25,
+)
+
+
+def _pel_step(state: dict, op: tuple, now: int, log, ids: list[str]):
+    """Apply ``op`` through the PEL functions (inside update_group)."""
+    kind = op[0]
+    if kind == "claim":
+        start = state["last_delivered_pos"]
+        rows = log.read_slice(start, min(start + op[2], _N_MSGS))
+        pel_claim(state, op[1], [(pos, msgid) for pos, msgid, _ in rows], now)
+        state["last_delivered_pos"] = start + len(rows)
+        return rows
+    if kind == "own":
+        return pel_own(state, op[1], op[2], redeliver=True)
+    if kind == "ack":
+        return pel_ack(state, [ids[k] for k in op[1]])
+    if kind == "xclaim":
+        return pel_reown(state, [ids[k] for k in op[1]], op[2], op[3], now)
+    return pel_evict(state, op[1])
+
+
+def _model_step(model: dict, op: tuple, now: int, ids: list[str], result) -> None:
+    """The same op on a plain msgid -> entry dict; checks ``result``."""
+    kind = op[0]
+    if kind == "claim":
+        for pos, msgid, _ in result:
+            model[msgid] = {
+                "pos": pos, "consumer": op[1], "delivered_ms": now, "times_delivered": 1
+            }
+        return
+    if kind == "own":
+        own = sorted((e["pos"], m) for m, e in model.items() if e["consumer"] == op[1])
+        assert result == (own[: op[2]], len(own))
+        for _, msgid in own[: op[2]]:
+            model[msgid]["times_delivered"] += 1
+        return
+    if kind == "ack":
+        gone = {ids[k] for k in op[1]} & set(model)
+        assert result == len(gone)
+        for msgid in gone:
+            del model[msgid]
+        return
+    if kind == "xclaim":
+        moved = [
+            msgid
+            for msgid in {ids[k] for k in op[1]} & set(model)
+            if now - model[msgid]["delivered_ms"] >= op[3]
+        ]
+        assert result == len(moved)
+        for msgid in moved:
+            e = model[msgid]
+            e.update(consumer=op[2], delivered_ms=now, times_delivered=e["times_delivered"] + 1)
+        return
+    lost = [m for m, e in model.items() if e["consumer"] == op[1]]
+    assert result == len(lost)
+    for msgid in lost:
+        del model[msgid]
+
+
+@settings(max_examples=60, deadline=None)
+@given(ops=_PEL_OPS)
+def test_pel_functions_match_a_msgid_dict(tmp_path_factory, ops):
+    """Random claim / redeliver / ack / XCLAIM / remove-consumer sequences
+    through update_group on both backends agree with a plain msgid ->
+    entry dict; each consumer's entries stay in position order and the
+    PEL is empty exactly when nothing is pending."""
+    root = str(tmp_path_factory.mktemp("pel"))
+    server = f"pel-{os.path.basename(root)}"
+    try:
+        for log in _both_backends(root, server):
+            ids = log.append_many([{"i": i} for i in range(_N_MSGS)])
+            log.create_group("g")
+            model: dict[str, dict] = {}
+            for step, op in enumerate(ops):
+                now = 10 * step
+                result = log.update_group(
+                    "g", lambda state: _pel_step(state, op, now, log, ids)
+                )
+                _model_step(model, op, now, ids, result)
+                state = log.group_state("g")
+                assert pel_scan(state) == model
+                assert pel_counts(state) == Counter(e["consumer"] for e in model.values())
+                assert (len(state["pel"]) == 0) == (not model)
+                for consumer in pel_counts(state):
+                    pos = [e["pos"] for e in pel_scan(state, consumer).values()]
+                    assert pos == sorted(pos)
+    finally:
+        FakeRedis.reset_server(server)
+
+
+def test_per_message_pel_is_migrated_on_first_touch(tmp_path):
+    """A group state written with one PEL object per message reads the
+    same through the PEL functions and is rewritten, keyed by consumer,
+    by the first transaction that touches the PEL."""
+    server = f"pel-migrate-{tmp_path.name}"
+    try:
+        for log in _both_backends(str(tmp_path), server):
+            ids = log.append_many([{"i": i} for i in range(4)])
+            log.create_group("g")
+            old = {
+                ids[2]: {"pos": 2, "consumer": "a", "delivered_ms": 5, "times_delivered": 1},
+                ids[0]: {"pos": 0, "consumer": "a", "delivered_ms": 5, "times_delivered": 2},
+                ids[1]: {"pos": 1, "consumer": "b", "delivered_ms": 6, "times_delivered": 1},
+            }
+            state = log.group_state("g")
+            state.update(pel=old, last_delivered_pos=3)
+            log.save_group("g", state)
+            assert pel_scan(log.group_state("g")) == old
+            batch = Consumer(
+                log, "s", "g", consumer_id="a", batch_size=3, max_wait_time_ms=50
+            ).get_items()
+            assert [m.msgid for m in batch] == [ids[0], ids[2], ids[3]]
+            state = log.group_state("g")
+            assert set(state["pel"]) == {"a", "b"}
+            assert [e["times_delivered"] for e in pel_scan(state, "a").values()] == [3, 2, 1]
+            assert pel_scan(state, "b") == {ids[1]: old[ids[1]]}
+    finally:
+        FakeRedis.reset_server(server)
 
 
 @settings(max_examples=200, deadline=None)
