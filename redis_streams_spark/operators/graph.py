@@ -11,10 +11,14 @@ Scale shape (same as the registry query): the degree-annotated edge list
 is built once and persisted; each round is one equi-join shuffle
 (edges ⋈ ranks on src) plus a map-side-combined sum by dst.  The
 convergence check is a 1-row aggregate action per round — the driver
-holds a single double, rank state never leaves the cluster.  Lineage is
-checkpointed every ``checkpoint_every`` rounds so deep convergence runs
-do not accumulate an unbounded plan (same discipline as
-operators/dedup.py's connected-components loop).
+holds a single double, rank state never leaves the cluster.  With
+``tol`` each round's ranks are an eager local checkpoint, so the next
+round plans against a leaf instead of nesting every earlier round (the
+plan strings Spark builds per stage otherwise double each round); the
+previous round's checkpoint is released once the delta is known.
+Without ``tol`` lineage is checkpointed every ``checkpoint_every``
+rounds (same discipline as operators/dedup.py's connected-components
+loop).
 
 Reference basis: none (no graph ops in redis-streams); standard power-
 iteration PageRank.
@@ -57,10 +61,10 @@ def pagerank(
     # cache lifecycle is mode-dependent (review finding, round 6): the
     # tol loop runs an ACTION per round, so persisting ed/nodes pays off
     # and both can be unpersisted before returning (the final ranks are
-    # persisted AND materialized by the last delta action).  With
-    # tol=None no action runs inside the loop — a persist would never
-    # materialize before an end-of-function unpersist dropped it, so the
-    # duplicated subtrees are left to Spark's exchange reuse instead.
+    # a materialized local checkpoint).  With tol=None no action runs
+    # inside the loop — a persist would never materialize before an
+    # end-of-function unpersist dropped it, so the duplicated subtrees
+    # are left to Spark's exchange reuse instead.
     if tol is not None:
         ed = ed.persist()
         nodes = nodes.persist()
@@ -88,26 +92,33 @@ def pagerank(
                 ).alias("pr"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            new_pr = new_pr.localCheckpoint(eager=False)
         iters_run = i + 1
-        if tol is not None:
-            # one scalar action per round: L1 delta between rank vectors
-            new_pr = new_pr.persist()
-            delta = (
-                new_pr.withColumnRenamed("pr", "pr_new")
-                .join(pr, "id")
-                .agg(F.sum(F.abs(F.col("pr_new") - F.col("pr"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            old = pr
+        if tol is None:
+            if iters_run % checkpoint_every == 0:
+                new_pr = new_pr.localCheckpoint(eager=False)
             pr = new_pr
-            old.unpersist()  # no-op on the never-persisted initial ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            pr = new_pr
+            continue
+        # one scalar action per round: L1 delta between rank vectors
+        new_pr = new_pr.localCheckpoint(eager=True)
+        delta = (
+            new_pr.withColumnRenamed("pr", "pr_new")
+            .join(pr, "id")
+            .agg(F.sum(F.abs(F.col("pr_new") - F.col("pr"))).alias("d"))
+            .collect()[0]["d"]
+        )
+        if i > 0:  # the initial ranks are a plan, not a checkpoint
+            _release_checkpoint(pr)
+        pr = new_pr
+        if delta is not None and delta < tol:
+            break
     if tol is not None:
         ed.unpersist()
         nodes.unpersist()
     return pr, iters_run
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a local checkpoint no plan reads any more.
+    ``DataFrame.unpersist`` cannot: a local checkpoint is a persisted
+    RDD under a ``LogicalRDD`` leaf, not a cache-manager entry."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -3,8 +3,11 @@
 Structured-Streaming mapping of the reference's delivery semantics
 (SURVEY §3.1):
 
-- ``initialOffset`` = position 0 — the reference's group creation at id
-  ``0-0`` / deliver-from-beginning (common.py:20-41).
+- ``initialOffset`` = the group's commit point (``last_committed``,
+  clamped to the oldest retained position): position 0 for a new group —
+  the reference's group creation at id ``0-0`` / deliver-from-beginning
+  (common.py:20-41) — but a fresh checkpoint on a group that already
+  committed resumes there instead of re-reading its history.
 - ``latestOffset`` plans at most ``batch_size`` rows per trigger — the
   COUNT bound of the reference's time+count batch contract
   (consumer.py:92-103); the TIME bound is the query's trigger interval.
@@ -290,7 +293,8 @@ class RedisLogStreamReader(DataSourceStreamReader):
         self._log.create_group(self.group)
 
     def initialOffset(self) -> dict:
-        return {"pos": 0}
+        committed = self._log.group_state(self.group)["last_committed"]
+        return {"pos": max(committed, self._log.first_pos())}
 
     def latestOffset(self) -> dict:
         """Plan the next micro-batch: advance the group cursor by at most
@@ -301,7 +305,10 @@ class RedisLogStreamReader(DataSourceStreamReader):
         log = self._log
 
         def plan(state: dict) -> int:
-            base = max(state["last_planned"], state["last_committed"])
+            # never plan below the trim point, where initialOffset starts
+            base = max(
+                state["last_planned"], state["last_committed"], log.first_pos()
+            )
             total = log.count()
             planned = (
                 total if self.batch_size <= 0 else min(total, base + self.batch_size)

@@ -10,19 +10,19 @@ backend (``tests/test_parity_api.py`` is parametrized over both).
 
 Data plane (per stream, namespaced ``rss:{root}:{stream}``):
 
-- ``{ns}:log`` — a REAL Redis Stream.  ``append`` is an XADD with an
-  explicit id ``<ms>-<seq>`` minted by the same
+- ``{ns}:log`` — a REAL Redis Stream whose entry ids are positions:
+  the message at global append position ``pos`` is entry ``<pos+1>-0``
+  (Redis refuses ``0-0``).  ``append`` is an XADD of that id;
+  ``read_slice(start, end)`` is one XRANGE ``<start+1>-0 <end>-0``
+  with each position parsed back from its entry id; ``trim``/``maxlen``
+  is an exact XTRIM (reference producer.py:26-35 uses ``MAXLEN ~``
+  approximate; ours is exact — the same strictly stronger guarantee the
+  file backend documents).  Positions never shift on trim.  The
+  message's ``<ms>-<seq>`` msgid, minted by the same
   :func:`~redis_streams_spark.sources.stream_log.mint_ids` as the file
-  backend (reference producer.py:44-49); ``read_slice`` is an XRANGE;
-  ``trim``/``maxlen`` is an exact XTRIM (reference producer.py:26-35
-  uses ``MAXLEN ~`` approximate; ours is exact — the same strictly
-  stronger guarantee the file backend documents).  The canonical
-  zero-padded msgid is carried in a reserved ``_msgid`` field because
-  Redis normalizes entry ids to unpadded ``<ms>-<seq>``.
-- ``{ns}:idx`` — ZSET position index, score = global append position,
-  member = redis entry id.  Positions never shift on trim (exactly like
-  Redis ids); the index makes ``read_slice(start, end)`` an
-  O(log n + range) ZRANGEBYSCORE + one XRANGE instead of a scan.
+  backend (reference producer.py:44-49), is its ingest time: it rides in
+  a reserved ``_msgid`` field in the canonical zero-padded form, and it
+  is what every engine API returns.
 - ``{ns}:meta`` — JSON blob ``{appended, first_pos, last_ms, last_seq}``
   (the O(1) backlog metadata the Scaler reads, SURVEY S16).
 
@@ -148,7 +148,6 @@ class RedisStreamLog:
         self.client = client if client is not None else self._connect(url)
         ns = f"rss:{root}:{stream}"
         self._k_log = f"{ns}:log"
-        self._k_idx = f"{ns}:idx"
         self._k_meta = f"{ns}:meta"
         self._k_groups = f"{ns}:groups"
         self._ns = ns
@@ -240,45 +239,36 @@ class RedisStreamLog:
 
     def _reconciled_meta(self) -> dict:
         """Meta blob self-healed against the actual stream state — one
-        pipelined round trip for (meta, stream top, index size).
+        pipelined round trip for (meta, stream top).
 
         The crash window this closes (ADVICE r06): a writer that died
         between the append pipeline flush and the meta save leaves the
-        stream/index AHEAD of meta; trusting the stale blob would
-        re-mint an already-used id and the server would refuse every
-        subsequent XADD ('id is equal or smaller than the target stream
-        top item') — a permanently wedged stream.  Reconciling
-        last_ms/last_seq from XREVRANGE COUNT 1 and appended from
-        first_pos + ZCARD makes the next append mint PAST the orphaned
-        entries.  Recovery is redo-shaped, at-least-once: if the crash
-        hit before the trailing ZADD, the entries have no positions and
-        read_slice's score-keyed attribution never surfaces them (the
-        failed batch stays failed); if the whole pipeline applied, the
-        ZCARD reconcile adopts the entries — they become readable, and
-        a retrying producer may duplicate them (the same at-least-once
-        contract the delivery side already documents).  A crash
-        inside trim (index pruned, first_pos stale) self-corrects on the
-        next trim: excess is computed from the same stale first_pos it
-        increments, so the post-trim first_pos lands exactly right."""
-        pipe_factory = getattr(self.client, "pipeline", None)
-        if pipe_factory:
-            pipe = pipe_factory(transaction=False)
-            pipe.get(self._k_meta)
-            pipe.xrevrange(self._k_log, count=1)
-            pipe.zcard(self._k_idx)
-            raw, top, idx_count = pipe.execute()
-        else:
-            raw = self.client.get(self._k_meta)
-            top = self.client.xrevrange(self._k_log, count=1)
-            idx_count = self.client.zcard(self._k_idx)
+        stream AHEAD of meta; trusting the stale blob would re-use the
+        positions and msgids of the orphaned entries, and the server
+        would refuse every later XADD ('id is equal or smaller than the
+        target stream top item') — a permanently wedged stream.  The top
+        entry carries both answers: ``appended`` is its position + 1 (its
+        id) and ``last_ms``/``last_seq`` come from its ``_msgid``, so the
+        next append positions and mints PAST the orphaned entries.
+        Recovery is redo-shaped, at-least-once: every applied XADD is
+        positioned, so reconcile adopts the orphans — they become
+        readable, and a retrying producer may duplicate them (the same
+        at-least-once contract the delivery side already documents).  A
+        crash inside trim (stream trimmed, first_pos stale) self-corrects
+        on the next trim: excess is computed from the same stale
+        first_pos it increments, so the post-trim first_pos lands
+        exactly right."""
+        pipe = self.client.pipeline(transaction=False)
+        pipe.get(self._k_meta)
+        pipe.xrevrange(self._k_log, count=1)
+        raw, top = pipe.execute()
         m = json.loads(raw) if raw is not None else self._meta_default()
         if top:
-            t_ms, t_seq = (int(x) for x in top[0][0].split("-"))
+            top_id, fields = top[0]
+            m["appended"] = max(m["appended"], int(top_id.split("-")[0]))
+            t_ms, t_seq = (int(x) for x in fields["_msgid"].split("-"))
             if (t_ms, t_seq) > (m["last_ms"], m["last_seq"]):
                 m["last_ms"], m["last_seq"] = t_ms, t_seq
-        true_appended = m["first_pos"] + int(idx_count)
-        if true_appended > m["appended"]:
-            m["appended"] = true_appended
         return m
 
     def count(self) -> int:
@@ -308,36 +298,26 @@ class RedisStreamLog:
             m = self._reconciled_meta()
             first = m["appended"]
             ms, seqs = mint_ids(m, len(contents))
-            ids: list[str] = []
-            # pipeline when the client offers one: a naive loop costs 2
-            # network round trips PER MESSAGE (xadd + zadd) — exactly the
-            # per-message XADD bound the reference lives with
-            # (producer.py:44-49); one pipelined flush amortizes it away.
+            # one pipelined flush, not one round trip per XADD (the
+            # reference's per-message bound, producer.py:44-49).
             # transaction=False: the stream_lock already serializes
             # writers, MULTI/EXEC would only add latency.
-            pipe_factory = getattr(self.client, "pipeline", None)
-            sink = (
-                pipe_factory(transaction=False) if pipe_factory else self.client
-            )
-            idx_batch: dict[str, int] = {}
-            for k, (content, seq) in enumerate(zip(contents, seqs)):
+            pipe = self.client.pipeline(transaction=False)
+            ids: list[str] = []
+            for pos, (content, seq) in enumerate(zip(contents, seqs), first):
                 msgid = f"{ms}-{seq:06d}"
-                redis_id = f"{ms}-{seq}"
-                sink.xadd(
+                pipe.xadd(
                     self._k_log,
                     {**{k: str(v) for k, v in content.items()}, "_msgid": msgid},
-                    id=redis_id,
+                    id=f"{pos + 1}-0",
                 )
-                idx_batch[redis_id] = first + k
                 ids.append(msgid)
-            sink.zadd(self._k_idx, idx_batch)
             if len(contents) >= 5000:
                 # large epoch: buffering + flushing can approach the lock
                 # TTL — renew (compare-and-pexpire) before the flush so
                 # the hold provably spans it (ADVICE r06)
                 lock.renew()
-            if sink is not self.client:
-                sink.execute()
+            pipe.execute()
             self._save_meta(m, lock)
             if maxlen is not None and m["appended"] - m["first_pos"] > maxlen:
                 self._trim_locked(maxlen, lock)
@@ -353,34 +333,18 @@ class RedisStreamLog:
 
     def read_slice(self, start_pos: int, end_pos: int) -> list[tuple[int, str, dict]]:
         """Messages with position in [start_pos, end_pos) as
-        (pos, msgid, content) — ZRANGEBYSCORE (with scores) for the id
-        window, then one XRANGE over it.  Trimmed positions are silently
-        absent, same as XRANGE after XTRIM.
-
-        Positions come from the index SCORES, never from enumeration:
-        a concurrent trim between the ZRANGEBYSCORE and the XRANGE can
-        only REMOVE leading entries, and score-keyed attribution keeps
-        every surviving entry on its true position (an enumerated
-        zip(range(...)) here would relabel survivors with the trimmed
-        positions — review finding, round 6)."""
+        (pos, msgid, content) — one XRANGE over the entry ids
+        ``<start_pos+1>-0 .. <end_pos>-0``, each position parsed back from
+        its id.  Trimmed positions are silently absent, same as XRANGE
+        after XTRIM, and survivors keep their true positions."""
         if start_pos >= end_pos:
             return []
-        pairs = self.client.zrangebyscore(
-            self._k_idx, start_pos, end_pos - 1, withscores=True
-        )
-        if not pairs:
-            return []
-        pos_by_id = {member: int(score) for member, score in pairs}
-        entries = self.client.xrange(
-            self._k_log, min=pairs[0][0], max=pairs[-1][0]
-        )
         out: list[tuple[int, str, dict]] = []
-        for redis_id, fields in entries:
-            pos = pos_by_id.get(redis_id)
-            if pos is None:  # indexed after our zset snapshot — out of range
-                continue
+        for redis_id, fields in self.client.xrange(
+            self._k_log, min=f"{start_pos + 1}-0", max=f"{end_pos}-0"
+        ):
             msgid = fields.pop("_msgid")
-            out.append((pos, msgid, fields))
+            out.append((int(redis_id.split("-")[0]) - 1, msgid, fields))
         return out
 
     def trim(self, maxlen: int) -> int:
@@ -393,15 +357,12 @@ class RedisStreamLog:
         if excess <= 0:
             return 0
         self.client.xtrim(self._k_log, maxlen=maxlen, approximate=False)
-        self.client.zremrangebyscore(
-            self._k_idx, m["first_pos"], m["first_pos"] + excess - 1
-        )
         m["first_pos"] += excess
         self._save_meta(m, lock)
         return excess
 
     def delete(self) -> None:
-        self.client.delete(self._k_log, self._k_idx, self._k_meta)
+        self.client.delete(self._k_log, self._k_meta)
         for g in self.list_groups():
             self.destroy_group(g)
 

@@ -19,15 +19,18 @@ socket.  This module provides both halves:
 - :class:`RespClient` — a minimal client with redis-py call signatures
   (``decode_responses=True`` behavior) for exactly the command subset
   :class:`~redis_streams_spark.sources.redis_log.RedisStreamLog`
-  issues.  Pure stdlib (``socket``), so it imports inside Spark's
+  issues: string blobs and locks (SET/GET/DEL/EXISTS/PEXPIRE/EVAL),
+  set registries (SADD/SREM/SMEMBERS) and the position-keyed stream
+  (XADD/XLEN/XRANGE/XREVRANGE/XTRIM).  Pure stdlib (``socket``), so it imports inside Spark's
   executor workers where redis-py is absent; pointed at a *real* Redis
   server it works identically, because the bytes on the wire are real
   RESP.
 
 ``RespClient.pipeline()`` is genuine pipelining: queued commands are
 encoded into one ``sendall`` and the replies drained in order — the
-batch-append amortization ``RedisStreamLog.append_many`` relies on
-happens on the wire, not just in the fake.
+batched XADDs of ``RedisStreamLog.append_many`` and the GET + XREVRANGE
+of its crash reconcile are one round trip on the wire, not just in the
+fake.
 
 Scope: RESP2 only (no RESP3 push/verbatim types), no pub/sub, no
 AUTH/TLS — this is the storage data plane for tests and local runs, not
@@ -285,24 +288,6 @@ class RespServer:
                 approximate = args[i] == "~"
                 i += 1
             return c.xtrim(args[0], maxlen=int(args[i]), approximate=approximate)
-        if name == "ZADD":
-            mapping = {
-                member: float(score)
-                for score, member in zip(args[1::2], args[2::2])
-            }
-            return c.zadd(args[0], mapping)
-        if name == "ZCARD":
-            return c.zcard(args[0])
-        if name == "ZRANGEBYSCORE":
-            withscores = any(a.upper() == "WITHSCORES" for a in args[3:])
-            hits = c.zrangebyscore(
-                args[0], float(args[1]), float(args[2]), withscores=withscores
-            )
-            if withscores:
-                return [x for m, sc in hits for x in (m, format(sc, ".17g"))]
-            return list(hits)
-        if name == "ZREMRANGEBYSCORE":
-            return c.zremrangebyscore(args[0], float(args[1]), float(args[2]))
         if name == "EVAL":
             script, numkeys = args[0], int(args[1])
             return c.eval(script, numkeys, *args[2:])
@@ -459,28 +444,6 @@ class RespClient:
             "XTRIM", name, "MAXLEN", "~" if approximate else "=", maxlen
         )
 
-    # -- sorted sets -----------------------------------------------------
-    def zadd(self, name, mapping):
-        cmd = ["ZADD", name]
-        for member, score in mapping.items():
-            cmd += [score, member]
-        return self._call(*cmd)
-
-    def zcard(self, name):
-        return self._call("ZCARD", name)
-
-    def zrangebyscore(self, name, min, max, withscores=False):
-        cmd = ["ZRANGEBYSCORE", name, min, max]
-        if withscores:
-            cmd.append("WITHSCORES")
-        raw = self._call(*cmd)
-        if withscores:
-            return [(m, float(sc)) for m, sc in zip(raw[::2], raw[1::2])]
-        return raw
-
-    def zremrangebyscore(self, name, min, max):
-        return self._call("ZREMRANGEBYSCORE", name, min, max)
-
     # -- pipeline --------------------------------------------------------
     def pipeline(self, transaction: bool = True) -> "_RespPipeline":
         """Wire pipelining: commands buffer client-side and flush in one
@@ -514,12 +477,6 @@ class _RespPipeline:
             None, *cmd, on_error=lambda e: ValueError(str(e))
         )
 
-    def zadd(self, name, mapping):
-        cmd = ["ZADD", name]
-        for member, score in mapping.items():
-            cmd += [score, member]
-        return self._queue(None, *cmd)
-
     def get(self, name):
         return self._queue(None, "GET", name)
 
@@ -528,9 +485,6 @@ class _RespPipeline:
         if count is not None:
             cmd += ["COUNT", count]
         return self._queue(RespClient._entries, *cmd)
-
-    def zcard(self, name):
-        return self._queue(None, "ZCARD", name)
 
     def execute(self) -> list:
         client = self._client

@@ -39,14 +39,14 @@ def test_positions_survive_trim(rlog):
 
 
 def test_msgid_is_padded_but_redis_id_is_not(rlog):
-    msgid = rlog.append({"a": 1})
-    ms, seq = msgid.split("-")
-    assert len(seq) == 6  # canonical zero-padded form, same as file backend
-    # the underlying stream entry uses the normalized redis id but carries
-    # the canonical msgid in the reserved _msgid field
+    msgids = rlog.append_many([{"a": 1}, {"a": 2}])
+    for msgid in msgids:
+        assert len(msgid.split("-")[1]) == 6  # canonical zero-padded form
+    # the underlying stream entry id is the position (<pos+1>-0, Redis
+    # refuses 0-0); the canonical msgid rides in the reserved _msgid field
     entries = rlog.client.xrange(rlog._k_log)
-    assert entries[0][1]["_msgid"] == msgid
-    assert entries[0][0] == f"{ms}-{int(seq)}"
+    assert [eid for eid, _ in entries] == ["1-0", "2-0"]
+    assert [fields["_msgid"] for _, fields in entries] == msgids
 
 
 def test_append_many_and_read_slice_window(rlog):
@@ -142,7 +142,7 @@ def test_connect_log_never_silently_falls_back_to_file(tmp_path, monkeypatch):
 
 
 def test_read_slice_attributes_positions_by_index_score(rlog):
-    """Positions come from zset scores, not enumeration: after a trim,
+    """Positions come from the entry ids, not enumeration: after a trim,
     surviving entries keep their TRUE positions even when the caller
     asks for a window that starts below first_pos."""
     ids = [rlog.append({"i": i}) for i in range(10)]
@@ -153,6 +153,25 @@ def test_read_slice_attributes_positions_by_index_score(rlog):
         (7, ids[7]),
         (8, ids[8]),
         (9, ids[9]),
+    ]
+
+
+def test_read_slice_is_one_xrange(rlog):
+    """Entry ids are positions, so a slice is one XRANGE over them: no
+    second command maps positions to entries."""
+    rlog.append_many([{"i": i} for i in range(20)])
+    real, calls = rlog.client, []
+
+    class Counting:
+        def __getattr__(self, name):
+            calls.append(name)
+            return getattr(real, name)
+
+    rlog.client = Counting()
+    rows = rlog.read_slice(5, 12)
+    assert calls == ["xrange"]
+    assert [(pos, c["i"]) for pos, _, c in rows] == [
+        (pos, str(pos)) for pos in range(5, 12)
     ]
 
 
@@ -171,8 +190,8 @@ def test_fake_xadd_monotonic_under_clock_stepback(rlog, monkeypatch):
 
 
 def test_append_many_uses_one_pipeline_flush(rlog):
-    """append_many must batch its stream+index writes through the
-    client's pipeline — one flush, not 2 round trips per message."""
+    """append_many must batch its stream writes through the client's
+    pipeline — one flush, not one round trip per message."""
     calls = {"pipelines": 0, "xadds": 0, "xadds_before_flush": None}
     real_pipeline = rlog.client.pipeline
     real_xadd = rlog.client.xadd
@@ -202,8 +221,8 @@ def test_append_many_uses_one_pipeline_flush(rlog):
         del rlog.client.pipeline
         del rlog.client.xadd
     assert len(ids) == 50
-    # exactly two flushes: the batched reconcile READ (meta + stream top
-    # + index size) and the single WRITE flush for all 50 messages
+    # exactly two flushes: the batched reconcile READ (meta + stream top)
+    # and the single WRITE flush for all 50 messages
     assert calls["pipelines"] == 2
     assert calls["xadds_before_flush"] == 0  # nothing issued eagerly
     assert calls["xadds"] == 50  # all 50 replayed through the one flush

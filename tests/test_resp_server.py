@@ -17,6 +17,7 @@ from __future__ import annotations
 import pickle
 import threading
 import time
+from types import SimpleNamespace
 
 import pytest
 
@@ -74,22 +75,15 @@ def test_wire_commands_round_trip(client):
     with pytest.raises(ValueError, match="equal or smaller"):
         client.xadd("st", {"f": "3"}, id="100-0")  # id regression refused
 
-    assert client.zadd("z", {"a": 1.0, "b": 2.0}) == 2
-    assert client.zcard("z") == 2
-    assert client.zrangebyscore("z", 1, 2, withscores=True) == [
-        ("a", 1.0),
-        ("b", 2.0),
-    ]
-    assert client.zremrangebyscore("z", 1, 1) == 1
-
 
 def test_wire_pipeline_flushes_in_one_send(client):
+    client.set("pk", "v")
     pipe = client.pipeline(transaction=False)
     pipe.xadd("p", {"i": "0"}, id="5-0")
     pipe.xadd("p", {"i": "1"}, id="5-1")
-    pipe.zadd("pz", {"5-0": 0, "5-1": 1})
+    pipe.get("pk")
     out = pipe.execute()
-    assert out == ["5-0", "5-1", 2]
+    assert out == ["5-0", "5-1", "v"]
     assert client.xlen("p") == 2
 
 
@@ -100,17 +94,17 @@ def test_wire_pipeline_error_keeps_connection_framed(client):
     (reproduced there: GET of a missing key returned '200-0').  redis-py
     behavior: drain everything, then raise the first error."""
     client.xadd("fr", {"i": "0"}, id="200-0")
+    client.set("frk", "v")
     pipe = client.pipeline(transaction=False)
     pipe.xadd("fr", {"i": "1"}, id="100-0")  # id regression → error reply
     pipe.xadd("fr", {"i": "2"}, id="200-1")  # must still drain (and apply)
-    pipe.zadd("frz", {"m": 1.0})
+    pipe.get("frk")  # its reply must be drained too, not left on the socket
     # pipelined xadd surfaces the same exception type as single xadd
     with pytest.raises(ValueError, match="equal or smaller"):
         pipe.execute()
     # the connection is still framed: every later command reads ITS reply
     assert client.get("missing-key") is None
     assert client.xlen("fr") == 2  # 200-0 and the post-error 200-1
-    assert client.zcard("frz") == 1
     # and a clean pipeline on the same connection still works end-to-end
     pipe2 = client.pipeline(transaction=False)
     pipe2.get("missing-key")
@@ -219,40 +213,40 @@ def test_append_fails_loudly_when_lock_expires_mid_hold(wire_log, monkeypatch):
         wire_log.append({"a": 1})
 
 
-def test_crash_between_flush_and_meta_save_self_heals(wire_log):
+def test_crash_between_flush_and_meta_save_self_heals(wire_log, monkeypatch):
     """ADVICE r06 medium: writer dies after the pipeline flush but
     before the meta save → stream top is ahead of meta.  The next
-    append must reconcile and mint PAST the orphaned ids instead of
-    wedging every future XADD with an id-regression error."""
+    append must reconcile and position and mint PAST the orphaned
+    entries instead of re-using their positions and msgids (or wedging
+    every future XADD with an id-regression error)."""
+    import redis_streams_spark.sources.stream_log as stream_log
+
     wire_log.append_many([{"i": i} for i in range(3)])
     m = wire_log._meta()
-    # simulate the crash: write stream+index entries the meta never saw
+    # simulate the crash: write stream entries the meta never saw, each
+    # keyed by its position (entry id <pos+1>-0) like append_many does
     top_ms = m["last_ms"]
     pipe = wire_log.client.pipeline(transaction=False)
     for k in range(2):
-        rid = f"{top_ms}-{m['last_seq'] + 1 + k}"
         pipe.xadd(
             wire_log._k_log,
             {"i": str(90 + k), "_msgid": f"{top_ms}-{m['last_seq'] + 1 + k:06d}"},
-            id=rid,
+            id=f"{m['appended'] + 1 + k}-0",
         )
-    pipe.zadd(
-        wire_log._k_idx,
-        {
-            f"{top_ms}-{m['last_seq'] + 1}": m["appended"],
-            f"{top_ms}-{m['last_seq'] + 2}": m["appended"] + 1,
-        },
-    )
     pipe.execute()  # meta deliberately NOT saved — the crash window
 
+    # a clock behind the orphans: the fresh id can only clear them if
+    # reconcile took last_ms/last_seq from the stream top
+    monkeypatch.setattr(stream_log, "time", SimpleNamespace(time=lambda: 0.0))
     ids = wire_log.append_many([{"i": "fresh"}])  # must not raise
     assert len(ids) == 1
     m2 = wire_log._meta()
     assert m2["appended"] == 6  # 3 committed + 2 adopted orphans + 1 fresh
     rows = wire_log.read_slice(0, 10)
+    assert [pos for pos, _, _ in rows] == list(range(6))
     assert [c["i"] for _, _, c in rows] == ["0", "1", "2", "90", "91", "fresh"]
     msgids = [msgid for _, msgid, _ in rows]
-    assert msgids == sorted(msgids)  # ids stayed strictly monotonic
+    assert msgids == sorted(set(msgids))  # ids stayed strictly monotonic
 
 
 # -- Spark end-to-end through the socket --------------------------------

@@ -14,6 +14,9 @@ from redis_streams_spark.sources.datasource import (
     RedisLogDataSource,
     RedisLogStreamReader,
 )
+from redis_streams_spark.sources.fake_redis import FakeRedis
+from redis_streams_spark.sources.redis_log import RedisStreamLog
+from redis_streams_spark.sources.resp import RespServer
 from redis_streams_spark.sources.stream_log import StreamLog
 from redis_streams_spark.streaming import Producer
 
@@ -76,6 +79,60 @@ def test_stream_reader_batch_cap_and_restart(seeded_log):
     state = log.group_state("g1")
     assert state["last_committed"] == 10
     assert state["last_planned"] == 23
+
+
+@pytest.fixture(params=["file", "redis"])
+def reader_opts(tmp_path, request):
+    """Stream-reader options and the log they open, on the file backend
+    and on the Redis backend behind a RESP socket (the reader dials the
+    ``redis_url`` option, as executor workers do)."""
+    opts = {"path": str(tmp_path), "stream": "s", "group": "g", "batch_size": "10"}
+    if request.param == "file":
+        return opts, StreamLog(str(tmp_path), "s")
+    name = f"src-{tmp_path.name}"
+    request.addfinalizer(lambda: FakeRedis.reset_server(name))
+    server = RespServer(FakeRedis(name)).start()
+    request.addfinalizer(server.stop)
+    opts["redis_url"] = server.url
+    return opts, RedisStreamLog(str(tmp_path), "s", client=FakeRedis(name))
+
+
+def _first_batch(reader) -> tuple[int, int, list[str]]:
+    """(start, end, row contents) of a fresh query's first micro-batch."""
+    start, end = reader.initialOffset(), reader.latestOffset()
+    contents = [
+        content
+        for part in reader.partitions(start, end)
+        for batch in reader.read(part)
+        for content in batch.column("content").to_pylist()
+    ]
+    return start["pos"], end["pos"], [dict(c)["i"] for c in contents]
+
+
+def test_fresh_checkpoint_starts_at_group_commit_point(reader_opts):
+    """A query started with a fresh checkpoint on a group that already
+    committed through 30 resumes there: its first batch is the next
+    batch_size rows, not the 30 committed ones plus 10 new."""
+    opts, log = reader_opts
+    Producer(log, "s").add_many([{"i": i} for i in range(50)])
+    first = RedisLogStreamReader(opts)
+    assert first.initialOffset() == {"pos": 0}  # a new group starts at 0
+    for _ in range(3):
+        first.commit(first.latestOffset())
+    assert log.group_state("g")["last_committed"] == 30
+
+    start, end, rows = _first_batch(RedisLogStreamReader(opts))
+    assert (start, end) == (30, 40)
+    assert rows == [str(i) for i in range(30, 40)]
+
+
+def test_fresh_group_on_trimmed_stream_starts_at_oldest_survivor(reader_opts):
+    opts, log = reader_opts
+    Producer(log, "s", maxlen=15).add_many([{"i": i} for i in range(50)])
+    assert log.first_pos() == 35
+    start, end, rows = _first_batch(RedisLogStreamReader(opts))
+    assert (start, end) == (35, 45)
+    assert rows == [str(i) for i in range(35, 45)]
 
 
 def test_streaming_end_to_end_with_batch_cap(spark, seeded_log, tmp_path):
