@@ -20,14 +20,18 @@ Structured-Streaming mapping of the reference's delivery semantics
   Delivered-but-uncommitted positions (planned > committed) are exactly
   the PEL: after a crash they are re-read from the offset log and
   redelivered (at-least-once, like unacked messages, README.md:10).
-- The stream writer stages rows per task and appends on driver-side
-  ``commit`` with a per-batch marker for idempotent retry; ``maxlen``
-  retention runs inside commit (S2's trim-on-write).
+- The stream writer's tasks return their rows as content-JSON lines in
+  their commit messages, and the driver-side ``commit`` appends them in
+  one batch whose meta write also records the epoch
+  (``meta["sinks"][sink_id] = batchId``): a replayed commit appends
+  nothing, and the sink keeps no file or key beside the log.  ``maxlen``
+  retention runs inside the append (S2's trim-on-write).
 
 Options: path (log root), stream, group (default "spark"),
 batch_size (default 100), maxlen (writer only), redis_url (Redis
 backend; travels with the serialized plan into executor workers, see
-``connect_log``).
+``connect_log``).  The stream writer also reads the query's
+``checkpointLocation`` as its sink id.
 
 Backend: logs are opened through ``connect_log`` — file-backed
 StreamLog by default, RedisStreamLog when the ``redis_url`` option (or
@@ -40,11 +44,8 @@ against, regardless of env skew.
 from __future__ import annotations
 
 import json
-import os
 import sys
-import uuid
 import zipimport
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -140,15 +141,17 @@ def _read_partition(partition: RangePartition):
 
 
 @dataclass
-class StagedCommit(WriterCommitMessage):
-    staging_path: str
-    n_rows: int
+class EpochRows(WriterCommitMessage):
+    """One write task's rows as content-JSON lines: pyspark pickles the
+    message back to the driver, which appends the lines on commit."""
+
+    lines: list[str]
 
 
 def _content_jsons(batch) -> list[str]:
     """Serialize one Arrow RecordBatch of sink input to content-JSON
-    lines (the staged format, byte-identical to what append_many would
-    write as each message's ``content`` object).  A ``content`` map
+    lines (the commit-message format, byte-identical to what append_many
+    would write as each message's ``content`` object).  A ``content`` map
     column passes through; any other schema is serialized field→string
     (the reference's flat str|int|float payload, producer.py:37).
     Columnar ``to_pylist`` + one json.dumps per row replaces the r08
@@ -186,50 +189,20 @@ def _content_jsons(batch) -> list[str]:
     ]
 
 
-def _stage_batches(root: str, stream: str, iterator) -> StagedCommit:
-    """Task-side staging: serialize every RecordBatch to content-JSON
-    lines in one staging file (buffered, one write per batch)."""
+def _stage_batches(iterator) -> EpochRows:
+    """Write task: serialize every RecordBatch to content-JSON lines and
+    return them in the task's commit message."""
     _drop_zip_importers()
-    staging_dir = os.path.join(root, stream, "staging")
-    os.makedirs(staging_dir, exist_ok=True)
-    path = os.path.join(staging_dir, f"{uuid.uuid4().hex}.jsonl")
-    n = 0
-    with open(path, "w") as f:
-        for batch in iterator:
-            lines = _content_jsons(batch)
-            if lines:
-                f.write("\n".join(lines) + "\n")
-                n += len(lines)
-    return StagedCommit(staging_path=path, n_rows=n)
-
-
-def _append_staged(log, messages, maxlen: int | None) -> int:
-    """Driver-side commit: concatenate staged content-JSON lines and
-    append them in ONE batch through ``append_many_serialized`` (the
-    file backend splices the lines byte-for-byte, the Redis backend
-    parses them into fields).  Returns the number of rows appended.
-
-    Staging files are removed only AFTER the append succeeds: if the
-    backend raises (lock contention, disk full, Redis error), the
-    epoch's staged rows stay on disk so a commit retry replays them and
-    ``abort()`` has something to clean (r09 advice)."""
     lines: list[str] = []
-    for msg in messages:
-        if msg is None:
-            continue
-        with open(msg.staging_path) as f:
-            lines.extend(ln.rstrip("\n") for ln in f if ln.strip())
-    if lines:
-        log.append_many_serialized(lines, maxlen=maxlen)
-    _discard_staged(messages)
-    return len(lines)
+    for batch in iterator:
+        lines.extend(_content_jsons(batch))
+    return EpochRows(lines)
 
 
-def _discard_staged(messages) -> None:
-    """Remove the staging files of a committed, replayed or aborted epoch."""
-    for msg in messages:
-        if msg and os.path.exists(msg.staging_path):
-            os.remove(msg.staging_path)
+def _epoch_lines(messages) -> list[str]:
+    """Driver side: the epoch's lines, task by task (a failed task's
+    message is None)."""
+    return [line for msg in messages if msg is not None for line in msg.lines]
 
 
 def _opts(options) -> tuple[str, str, str, int, str | None]:
@@ -339,72 +312,57 @@ class RedisLogStreamReader(DataSourceStreamReader):
 
         self._log.update_group(self.group, ack)
 
-    def stop(self) -> None:
-        pass
-
 
 class RedisLogStreamWriter(DataSourceStreamArrowWriter):
     """Sink: every input row becomes one appended message.
 
     Rows with a ``content`` map column pass through; any other schema is
     serialized field→string (the reference's flat str|int|float payload,
-    producer.py:37).  Two-phase: tasks stage Arrow batches as
-    content-JSON lines, driver commit splices them into the log in one
-    batch append + trim; a batch marker makes replayed commits no-ops
-    (idempotent).  Arrow transfer + serialized splice is the write-path
-    mirror of the r08 read-path rebuild (one epoch = one lock acquire,
-    one buffered write, one meta write — vs the reference's one XADD
-    round trip per message, producer.py:44-49)."""
+    producer.py:37).  Write tasks return content-JSON lines in their
+    commit messages; the driver's commit is one batch append + trim (one
+    lock acquire, one buffered write, one meta write per epoch — vs the
+    reference's one XADD round trip per message, producer.py:44-49) that
+    records ``meta["sinks"][sink_id] = batchId`` and skips a batch at or
+    below the record, so a replayed commit is a no-op.  ``sink_id`` is
+    the query's ``checkpointLocation`` option; a query whose checkpoint
+    comes from ``spark.sql.streaming.checkpointLocation`` does not pass
+    it and shares the record ``""`` with every such query on the stream."""
 
     def __init__(self, options):
         self.root, self.stream, _, _, self.url = _opts(options)
         self.maxlen = int(options["maxlen"]) if "maxlen" in options else None
+        self.sink_id = options.get("checkpointlocation", "")
 
-    def write(self, iterator) -> StagedCommit:
-        return _stage_batches(self.root, self.stream, iterator)
-
-    def _marker(self, batch_id: int) -> str:
-        commits = os.path.join(self.root, self.stream, "commits")
-        os.makedirs(commits, exist_ok=True)
-        return os.path.join(commits, str(batch_id))
+    def write(self, iterator) -> EpochRows:
+        return _stage_batches(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        marker = self._marker(batchId)
-        if os.path.exists(marker):  # replayed epoch → already appended
-            _discard_staged(messages)
-            return
-        log = connect_log(self.root, self.stream, url=self.url)
-        appended = _append_staged(log, messages, self.maxlen)
-        if not appended and self.maxlen is not None:
-            # empty epoch still re-enforces retention (another writer may
-            # have grown the stream past maxlen since the last batch)
-            log.trim(self.maxlen)
-        with open(marker, "w") as f:
-            f.write("ok")
-
-    def abort(self, messages, batchId: int) -> None:
-        _discard_staged(messages)
+        # an empty epoch still records its batch and re-enforces retention
+        # (another writer may have grown the stream past maxlen)
+        connect_log(self.root, self.stream, url=self.url).append_many_serialized(
+            _epoch_lines(messages), maxlen=self.maxlen, epoch=(self.sink_id, batchId)
+        )
 
 
 class RedisLogBatchWriter(DataSourceArrowWriter):
     """Batch sink: ``df.write.format("redislog")`` appends every row as a
-    message (overwrite mode resets the stream first).  Same Arrow-staged
-    two-phase commit as the stream writer, minus epoch markers (a batch
-    job commits once)."""
+    message (overwrite mode resets the stream first).  Same task-side
+    serialization and one driver-side append as the stream writer, minus
+    the epoch record (a batch job has a single commit).  The rows reach the
+    driver as task results, so one write is bounded by
+    ``spark.driver.maxResultSize``; the driver holds every line in memory
+    for the append either way."""
 
     def __init__(self, options, overwrite: bool):
         self.root, self.stream, _, _, self.url = _opts(options)
         self.maxlen = int(options["maxlen"]) if "maxlen" in options else None
         self.overwrite = overwrite
 
-    def write(self, iterator) -> StagedCommit:
-        return _stage_batches(self.root, self.stream, iterator)
+    def write(self, iterator) -> EpochRows:
+        return _stage_batches(iterator)
 
     def commit(self, messages) -> None:
         log = connect_log(self.root, self.stream, url=self.url)
         if self.overwrite:
             log.delete()
-        _append_staged(log, messages, self.maxlen)
-
-    def abort(self, messages) -> None:
-        _discard_staged(messages)
+        log.append_many_serialized(_epoch_lines(messages), maxlen=self.maxlen)

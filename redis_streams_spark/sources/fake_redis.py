@@ -24,6 +24,7 @@ the fake.
 
 from __future__ import annotations
 
+import bisect
 import threading
 import time
 
@@ -234,9 +235,11 @@ class FakeRedis:
         )
         out: list[tuple[str, dict[str, str]]] = []
         with self._srv.lock:
-            for eid, fields in self._srv.streams.get(name, []):
-                if eid < lo:
-                    continue
+            entries = self._srv.streams.get(name, [])
+            # ids are sorted: seek to lo, as Redis does, not scan from the head
+            start = bisect.bisect_left(entries, lo, key=lambda e: e[0])
+            for k in range(start, len(entries)):
+                eid, fields = entries[k]
                 if eid > hi:
                     break
                 out.append((f"{eid[0]}-{eid[1]}", dict(fields)))

@@ -23,8 +23,10 @@ Data plane (per stream, namespaced ``rss:{root}:{stream}``):
   backend (reference producer.py:44-49), is its ingest time: it rides in
   a reserved ``_msgid`` field in the canonical zero-padded form, and it
   is what every engine API returns.
-- ``{ns}:meta`` — JSON blob ``{appended, first_pos, last_ms, last_seq}``
-  (the O(1) backlog metadata the Scaler reads, SURVEY S16).
+- ``{ns}:meta`` — JSON blob ``{appended, first_pos, last_ms, last_seq,
+  sinks}`` (the O(1) backlog metadata the Scaler reads, SURVEY S16;
+  ``sinks`` is each Spark sink's last appended batch).  Nothing of a
+  stream lives on the local disk.
 
 Group state is a client-managed JSON blob at ``{ns}:group:{g}`` (names
 registry in the ``{ns}:groups`` set) rather than a native XGROUP: the
@@ -72,9 +74,11 @@ from collections.abc import Callable
 from contextlib import contextmanager
 
 from redis_streams_spark.sources.stream_log import (
+    Epoch,
     StreamLog,
     check_serialized,
     mint_ids,
+    record_epoch,
 )
 
 _LOCK_TTL_MS = 30_000  # crash-safety expiry; normal holds are ms-long
@@ -292,10 +296,30 @@ class RedisStreamLog:
         return self.append_many([content], maxlen=maxlen)[0]
 
     def append_many(self, contents: list[dict], maxlen: int | None = None) -> list[str]:
-        if not contents:
+        return self._append_contents(contents, maxlen)
+
+    def append_many_serialized(
+        self, payloads: list[str], maxlen: int | None = None, epoch: Epoch | None = None
+    ) -> list[str]:
+        """Same surface as the file backend: shape-checked content JSON,
+        parsed into fields (Redis stores field/value pairs, not lines),
+        and the optional sink epoch recorded by the same meta write."""
+        check_serialized(payloads)
+        return self._append_contents([json.loads(p) for p in payloads], maxlen, epoch)
+
+    def _append_contents(
+        self, contents: list[dict], maxlen: int | None, epoch: Epoch | None = None
+    ) -> list[str]:
+        """The one locked write every append goes through, as in the file
+        backend: mint, one pipelined XADD flush, one guarded meta set
+        (with the sink epoch, if any; a replayed epoch appends nothing),
+        then trim."""
+        if not contents and epoch is None:
             return []
         with self.stream_lock() as lock:
             m = self._reconciled_meta()
+            if epoch is not None and not record_epoch(m, epoch):
+                return []
             first = m["appended"]
             ms, seqs = mint_ids(m, len(contents))
             # one pipelined flush, not one round trip per XADD (the
@@ -322,14 +346,6 @@ class RedisStreamLog:
             if maxlen is not None and m["appended"] - m["first_pos"] > maxlen:
                 self._trim_locked(maxlen, lock)
         return ids
-
-    def append_many_serialized(
-        self, payloads: list[str], maxlen: int | None = None
-    ) -> list[str]:
-        """Same surface as the file backend: shape-checked content JSON,
-        parsed into fields (Redis stores field/value pairs, not lines)."""
-        check_serialized(payloads)
-        return self.append_many([json.loads(p) for p in payloads], maxlen=maxlen)
 
     def read_slice(self, start_pos: int, end_pos: int) -> list[tuple[int, str, dict]]:
         """Messages with position in [start_pos, end_pos) as
@@ -393,10 +409,6 @@ class RedisStreamLog:
         if raw is None:
             return self._empty_group()
         return json.loads(raw)
-
-    def save_group(self, group: str, state: dict) -> None:
-        self.client.set(self._group_key(group), json.dumps(state))
-        self.client.sadd(self._k_groups, group)
 
     def update_group(self, group: str, mutator: Callable[[dict], object]) -> object:
         with self.group_lock(group) as lock:

@@ -5,7 +5,8 @@ Layout (one directory per stream):
     <root>/<stream>/log.jsonl           {"msgid": "...", "content": {...}} per line
     <root>/<stream>/meta.json           {"appended": N, "first_pos": F,
                                          "last_ms": .., "last_seq": ..,
-                                         "bytes": committed log length}
+                                         "bytes": committed log length,
+                                         "sinks": {sink_id: last batch}}
     <root>/<stream>/groups/<name>.json  cursor + PEL + consumer registry
 
 Semantics mirrored from the reference:
@@ -54,6 +55,7 @@ from contextlib import contextmanager
 
 
 _INDEX_STEP = 256  # sparse offset-index granularity for read_slice
+Epoch = tuple[str, int]  # (sink_id, batch_id) of a Spark sink epoch
 
 
 def _atomic_write(path: str, payload: dict) -> None:
@@ -74,11 +76,27 @@ def mint_ids(meta: dict, n: int) -> tuple[int, range]:
     sequence numbers ``seqs``; message ``k`` is ``f"{ms}-{seqs[k]:06d}"``.
     ``ms`` never falls below the last minted one, so ids stay unique and
     strictly increasing when the clock steps back.  Advances ``appended``,
-    ``last_ms`` and ``last_seq`` in ``meta``; the caller persists it."""
+    ``last_ms`` and ``last_seq`` in ``meta``; the caller persists it.  An
+    empty batch (a sink epoch without rows) mints nothing."""
+    if not n:
+        return meta["last_ms"], range(0)
     ms = max(int(time.time() * 1000), meta["last_ms"])
     seq = meta["last_seq"] + 1 if ms == meta["last_ms"] else 0
     meta.update(appended=meta["appended"] + n, last_ms=ms, last_seq=seq + n - 1)
     return ms, range(seq, seq + n)
+
+
+def record_epoch(meta: dict, epoch: Epoch) -> bool:
+    """Record a sink epoch in the meta blob, for both backends:
+    ``meta["sinks"][sink_id]`` is the sink's last appended batch.  False,
+    recording nothing, for a batch at or below it: a replay whose rows
+    are already in the log."""
+    sink_id, batch_id = epoch
+    sinks = meta.setdefault("sinks", {})
+    if batch_id <= sinks.get(sink_id, -1):
+        return False
+    sinks[sink_id] = batch_id
+    return True
 
 
 def check_serialized(payloads: list[str]) -> None:
@@ -189,27 +207,33 @@ class StreamLog:
         )
 
     def append_many_serialized(
-        self, payloads: list[str], maxlen: int | None = None
+        self, payloads: list[str], maxlen: int | None = None, epoch: Epoch | None = None
     ) -> list[str]:
         """Batch append of PRE-SERIALIZED content objects: each element
         is the JSON text of a ``{str: str}`` content dict (exactly what
         ``json.dumps`` inside :meth:`append_many` would produce), spliced
         into the log byte-for-byte — no per-message parse/re-serialize on
-        the hot sink path (the Spark sink stages content JSON once at task
-        side and the commit appends it; the read path does the only
+        the hot sink path (the Spark sink serializes content JSON once at
+        task side and the commit appends it; the read path does the only
         json.loads).  Malformed payloads raise before anything is written
-        (:func:`check_serialized`)."""
+        (:func:`check_serialized`).  ``epoch=(sink_id, batch_id)`` is a
+        sink epoch (:func:`record_epoch`): recorded by the same meta
+        write, and a replayed one appends nothing."""
         check_serialized(payloads)
-        return self._append_payloads(payloads, maxlen)
+        return self._append_payloads(payloads, maxlen, epoch)
 
-    def _append_payloads(self, payloads: list[str], maxlen: int | None) -> list[str]:
+    def _append_payloads(
+        self, payloads: list[str], maxlen: int | None, epoch: Epoch | None = None
+    ) -> list[str]:
         """The one locked write every append goes through: mint the
         batch's ids, cut any torn tail, one buffered write of the spliced
-        lines, one meta write, then trim."""
-        if not payloads:
+        lines, one meta write (with the sink epoch, if any), then trim."""
+        if not payloads and epoch is None:
             return []
         with self.stream_lock():
             m = self._meta()
+            if epoch is not None and not record_epoch(m, epoch):
+                return []
             ms, seqs = mint_ids(m, len(payloads))
             ids = [f"{ms}-{seq:06d}" for seq in seqs]
             # byte-identical to json.dumps({"msgid": id, "content": c})
@@ -345,9 +369,6 @@ class StreamLog:
         except FileNotFoundError:
             return self._empty_group()
 
-    def save_group(self, group: str, state: dict) -> None:
-        _atomic_write(self._group_path(group), state)
-
     @contextmanager
     def group_lock(self, group: str):
         """Advisory exclusive lock for read-modify-write of group state —
@@ -367,7 +388,7 @@ class StreamLog:
         with self.group_lock(group):
             state = self.group_state(group)
             result = mutator(state)
-            self.save_group(group, state)
+            _atomic_write(self._group_path(group), state)
             return result
 
     def list_groups(self) -> list[str]:

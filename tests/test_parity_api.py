@@ -284,9 +284,10 @@ def _scaler_with(log, n_msgs, n_claimed, consumers):
         if i == 0 and n_claimed:
             con.get_items()
         else:
-            state = log.group_state("grp")
-            state["consumers"].setdefault(cid, {})["last_seen_ms"] = 0
-            log.save_group("grp", state)
+            log.update_group(
+                "grp",
+                lambda s: s["consumers"].setdefault(cid, {}).update(last_seen_ms=0),
+            )
     return Scaler(log, "teststream", "grp")
 
 

@@ -248,9 +248,7 @@ def test_per_message_pel_is_migrated_on_first_touch(tmp_path):
                 ids[0]: {"pos": 0, "consumer": "a", "delivered_ms": 5, "times_delivered": 2},
                 ids[1]: {"pos": 1, "consumer": "b", "delivered_ms": 6, "times_delivered": 1},
             }
-            state = log.group_state("g")
-            state.update(pel=old, last_delivered_pos=3)
-            log.save_group("g", state)
+            log.update_group("g", lambda s: s.update(pel=old, last_delivered_pos=3))
             assert pel_scan(log.group_state("g")) == old
             batch = Consumer(
                 log, "s", "g", consumer_id="a", batch_size=3, max_wait_time_ms=50

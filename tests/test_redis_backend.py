@@ -189,6 +189,36 @@ def test_fake_xadd_monotonic_under_clock_stepback(rlog, monkeypatch):
     assert ids == sorted(ids, key=lambda s: tuple(map(int, s.split("-"))))
 
 
+def test_fake_xrange_seek_matches_a_filter(rlog):
+    """The fake's XRANGE seeks to its lower bound instead of scanning
+    from the head; for every bound form ('-'/'+', bare ms, full id) and
+    count it returns what a plain filter of the sorted entries does."""
+    c = rlog.client
+    ids = [(ms, seq) for ms in (1, 2, 3, 5, 8) for seq in range(3)]
+    for ms, seq in ids:
+        c.xadd("s", {"v": f"{ms}-{seq}"}, id=f"{ms}-{seq}")
+    top = (1 << 62, 1 << 62)
+
+    def bound(b: str, bare_seq: int) -> tuple[int, int]:
+        if b in ("-", "+"):
+            return (0, 0) if b == "-" else top
+        ms, _, seq = b.partition("-")
+        return int(ms), int(seq) if seq else bare_seq
+
+    for lo in ("-", "0", "2", "4", "9", "2-1", "3-2", "8-2"):
+        for hi in ("+", "0", "2", "4", "9", "2-1", "5-0", "1-0"):
+            for count in (None, 1, 2, 4, 100):
+                want = [
+                    f"{ms}-{seq}"
+                    for ms, seq in ids
+                    if bound(lo, 0) <= (ms, seq) <= bound(hi, top[1])
+                ][:count]
+                got = c.xrange("s", min=lo, max=hi, count=count)
+                assert [eid for eid, _ in got] == want, (lo, hi, count)
+                assert all(f["v"] == eid for eid, f in got)
+    assert c.xrange("missing") == []
+
+
 def test_append_many_uses_one_pipeline_flush(rlog):
     """append_many must batch its stream writes through the client's
     pipeline — one flush, not one round trip per message."""

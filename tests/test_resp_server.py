@@ -307,6 +307,10 @@ def test_spark_streaming_source_and_sink_over_redis_backend(
     assert out.xlen() <= 15
     kept = out.read_slice(out.first_pos(), out.count())
     assert kept[-1][2]["payload"] == "msg22"
+    # the epochs' replay record is in the Redis meta, and the sink left
+    # nothing on the local disk under its path
+    assert out._meta()["sinks"] == {str(tmp_path / "ckpt_wire"): 3}
+    assert not (tmp_path / "rs2").exists()
 
     # and the batch reader sees the sink stream over the wire too
     df = (

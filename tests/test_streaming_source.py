@@ -8,11 +8,17 @@ append with idempotent commit + maxlen retention.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
+from redis_streams_spark.sources import stream_log
 from redis_streams_spark.sources.datasource import (
+    EpochRows,
     RedisLogDataSource,
     RedisLogStreamReader,
+    RedisLogStreamWriter,
 )
 from redis_streams_spark.sources.fake_redis import FakeRedis
 from redis_streams_spark.sources.redis_log import RedisStreamLog
@@ -82,10 +88,10 @@ def test_stream_reader_batch_cap_and_restart(seeded_log):
 
 
 @pytest.fixture(params=["file", "redis"])
-def reader_opts(tmp_path, request):
-    """Stream-reader options and the log they open, on the file backend
-    and on the Redis backend behind a RESP socket (the reader dials the
-    ``redis_url`` option, as executor workers do)."""
+def log_opts(tmp_path, request):
+    """Data-source options and the log they open, on the file backend
+    and on the Redis backend behind a RESP socket (the reader or writer
+    dials the ``redis_url`` option, as executor workers do)."""
     opts = {"path": str(tmp_path), "stream": "s", "group": "g", "batch_size": "10"}
     if request.param == "file":
         return opts, StreamLog(str(tmp_path), "s")
@@ -109,11 +115,11 @@ def _first_batch(reader) -> tuple[int, int, list[str]]:
     return start["pos"], end["pos"], [dict(c)["i"] for c in contents]
 
 
-def test_fresh_checkpoint_starts_at_group_commit_point(reader_opts):
+def test_fresh_checkpoint_starts_at_group_commit_point(log_opts):
     """A query started with a fresh checkpoint on a group that already
     committed through 30 resumes there: its first batch is the next
     batch_size rows, not the 30 committed ones plus 10 new."""
-    opts, log = reader_opts
+    opts, log = log_opts
     Producer(log, "s").add_many([{"i": i} for i in range(50)])
     first = RedisLogStreamReader(opts)
     assert first.initialOffset() == {"pos": 0}  # a new group starts at 0
@@ -126,8 +132,8 @@ def test_fresh_checkpoint_starts_at_group_commit_point(reader_opts):
     assert rows == [str(i) for i in range(30, 40)]
 
 
-def test_fresh_group_on_trimmed_stream_starts_at_oldest_survivor(reader_opts):
-    opts, log = reader_opts
+def test_fresh_group_on_trimmed_stream_starts_at_oldest_survivor(log_opts):
+    opts, log = log_opts
     Producer(log, "s", maxlen=15).add_many([{"i": i} for i in range(50)])
     assert log.first_pos() == 35
     start, end, rows = _first_batch(RedisLogStreamReader(opts))
@@ -167,7 +173,9 @@ def test_streaming_end_to_end_with_batch_cap(spark, seeded_log, tmp_path):
 
 def test_stream_writer_sink(spark, seeded_log, tmp_path):
     """Copy one stream into another through the sink; commit is the
-    append point; maxlen retention applies on commit."""
+    append point; maxlen retention applies on commit.  The epochs'
+    replay record is the output meta's ``sinks`` entry, and the sink
+    leaves no file of its own beside the log."""
     root, _ = seeded_log
     _register(spark)
     src = (
@@ -175,7 +183,7 @@ def test_stream_writer_sink(spark, seeded_log, tmp_path):
         .option("path", root)
         .option("stream", "s1")
         .option("group", "copy")
-        .option("batch_size", "50")
+        .option("batch_size", "7")
         .load()
     )
     q = (
@@ -196,6 +204,9 @@ def test_stream_writer_sink(spark, seeded_log, tmp_path):
     assert out.xlen() <= 15  # retention bound
     kept = out.read_slice(out.first_pos(), out.count())
     assert kept[-1][2]["payload"] == "msg22"  # newest retained
+    assert out._meta()["sinks"] == {str(tmp_path / "ckpt2"): 3}  # 4 epochs
+    left = sorted(os.listdir(out.dir))
+    assert left == ["groups", "log.jsonl", "meta.json", "stream.lock"]
 
 
 def test_available_now_uncapped(spark, seeded_log, tmp_path):
@@ -299,39 +310,45 @@ def test_batch_writer_struct_content_passthrough(spark, tmp_path):
     assert contents == [("k0", "0"), ("k1", "1"), ("k2", "2")]
 
 
+def _rows(*keys: str) -> list[EpochRows]:
+    """One write task's commit message carrying rows ``{"k": key}``."""
+    return [EpochRows([json.dumps({"k": k}) for k in keys])]
+
+
 def test_stream_writer_commit_replay_idempotent(tmp_path):
     """A replayed epoch commit (same batchId after a driver failure) must
-    not double-append: the batch marker makes the second commit a no-op."""
-    import json as _json
-    import os as _os
-
-    from redis_streams_spark.sources.datasource import (
-        RedisLogStreamWriter,
-        StagedCommit,
+    not double-append: the sink's record in the log meta makes the
+    second commit a no-op."""
+    root, ckpt = str(tmp_path), str(tmp_path / "ck")
+    writer = RedisLogStreamWriter(
+        {"path": root, "stream": "rw", "checkpointlocation": ckpt}
     )
-    from redis_streams_spark.sources.stream_log import StreamLog
-
-    root = str(tmp_path)
-    writer = RedisLogStreamWriter({"path": root, "stream": "rw"})
-
-    def stage(rows):
-        d = _os.path.join(root, "rw", "staging")
-        _os.makedirs(d, exist_ok=True)
-        p = _os.path.join(d, "s1.jsonl")
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        return StagedCommit(staging_path=p, n_rows=len(rows))
-
-    writer.commit([stage([{"k": "1"}, {"k": "2"}])], batchId=7)
+    writer.commit(_rows("1", "2"), batchId=7)
     log = StreamLog(root, "rw")
     assert log.xlen() == 2
-    # replay of the SAME epoch (fresh staging file, same batchId)
-    writer.commit([stage([{"k": "1"}, {"k": "2"}])], batchId=7)
+    # replay of the SAME epoch (same rows, same batchId)
+    writer.commit(_rows("1", "2"), batchId=7)
     assert log.xlen() == 2  # idempotent — no double append
     # next epoch appends normally
-    writer.commit([stage([{"k": "3"}])], batchId=8)
+    writer.commit(_rows("3"), batchId=8)
     assert log.xlen() == 3
+    assert log._meta()["sinks"] == {ckpt: 8}
+
+
+def test_sink_epochs_of_two_queries_do_not_collide(log_opts):
+    """Two queries (two checkpoint locations) write one output stream
+    and each commits its epoch 0: the stream holds both rows.  A replay
+    record keyed by batchId alone took B's epoch 0 for a replay of A's
+    and dropped it."""
+    opts, log = log_opts
+    a = RedisLogStreamWriter({**opts, "checkpointlocation": "/ck/a"})
+    b = RedisLogStreamWriter({**opts, "checkpointlocation": "/ck/b"})
+    a.commit(_rows("a"), batchId=0)
+    b.commit(_rows("b"), batchId=0)
+    assert [c["k"] for _, _, c in log.read_slice(0, log.count())] == ["a", "b"]
+    # each query's own replay is still a no-op
+    a.commit(_rows("a"), batchId=0)
+    assert log.count() == 2
 
 
 def test_union_of_two_stream_sources(spark, tmp_path):
@@ -397,40 +414,28 @@ def test_batch_writer_null_content_rows(spark, tmp_path):
 
 
 def test_commit_failure_preserves_staged_rows_for_retry(tmp_path, monkeypatch):
-    """If the backend append raises mid-commit, the epoch's staged files
-    must survive so a commit retry replays them (r09 advice: the old path
-    deleted staging files while accumulating, losing the rows)."""
-    import json as _json
-    import os as _os
-
-    import pytest as _pytest
-
-    from redis_streams_spark.sources.datasource import (
-        RedisLogStreamWriter,
-        StagedCommit,
-    )
-    from redis_streams_spark.sources.stream_log import StreamLog
-
+    """If the append fails mid-commit (here: the meta write, after the
+    rows reached the log file), the epoch is neither visible nor
+    recorded, so Spark's retry of the commit with the same messages
+    appends it exactly once."""
     root = str(tmp_path)
-    writer = RedisLogStreamWriter({"path": root, "stream": "rf"})
-    d = _os.path.join(root, "rf", "staging")
-    _os.makedirs(d, exist_ok=True)
-    p = _os.path.join(d, "s1.jsonl")
-    with open(p, "w") as f:
-        f.write(_json.dumps({"k": "1"}) + "\n")
-    staged = StagedCommit(staging_path=p, n_rows=1)
+    writer = RedisLogStreamWriter(
+        {"path": root, "stream": "rf", "checkpointlocation": str(tmp_path / "ck")}
+    )
+    messages = _rows("1")
 
-    def boom(self, payloads, maxlen=None):
+    def boom(path, payload):
         raise OSError("disk full")
 
-    monkeypatch.setattr(StreamLog, "append_many_serialized", boom)
-    with _pytest.raises(OSError):
-        writer.commit([staged], batchId=1)
-    assert _os.path.exists(p), "staged rows lost on failed append"
+    monkeypatch.setattr(stream_log, "_atomic_write", boom)
+    with pytest.raises(OSError):
+        writer.commit(messages, batchId=1)
     monkeypatch.undo()
-    writer.commit([staged], batchId=1)  # retry succeeds and cleans up
-    assert not _os.path.exists(p)
-    assert StreamLog(root, "rf").xlen() == 1
+    log = StreamLog(root, "rf")
+    assert log.xlen() == 0 and "sinks" not in log._meta()
+    writer.commit(messages, batchId=1)  # retry appends the epoch
+    writer.commit(messages, batchId=1)  # and a further replay is a no-op
+    assert [c for _, _, c in log.read_slice(0, log.count())] == [{"k": "1"}]
 
 
 def test_append_many_serialized_rejects_malformed_payloads(tmp_path):

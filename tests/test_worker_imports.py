@@ -130,4 +130,4 @@ def test_every_worker_entry_point_drops_zip_importers(tmp_path, monkeypatch):
     assert called(lambda: source.writer(None, False)) == 1
     assert called(lambda: list(RedisLogBatchReader(options).read(part))) == 1
     assert called(lambda: list(RedisLogStreamReader(options).read(part))) == 1
-    assert called(lambda: _stage_batches(root, "s", iter([]))) == 1
+    assert called(lambda: _stage_batches(iter([]))) == 1
